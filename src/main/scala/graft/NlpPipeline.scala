@@ -26,18 +26,23 @@ object NlpPipeline {
   /** Run the full pipeline over a `(doc_id, text, ...)` corpus. Returns the
     * reference's per-document result relation: cleaned/processed text,
     * summary (+truncation), tags, lengths, compression ratio
-    * (nlp_data_tagging.py:410-418 + 427-428).
+    * (nlp_data_tagging.py:410-418 + 427-428). `doc_id` is the corpus key;
+    * rows with a null `doc_id` are dropped.
+    *
+    * Stages 1-3 and 6 are one narrow projection per document (cleaning,
+    * the per-row summary kernel, the metrics); the only join is the left
+    * join with the topic tags.
     */
   def run(docs: DataFrame, cfg: Config = Config()): DataFrame = {
     // stages 1-2: clean + tokenize
-    val cleaned = docs
+    val cleaned = docs.where(col("doc_id").isNotNull)
       .withColumn("cleaned_text", TextOps.preprocess(col("text")))
       .withColumn("processed_text", TextOps.cleanTokensText(col("cleaned_text")))
     // stage 3: extractive summary (sentence split on punctuation; corpora
     // without punctuation degenerate to identity, reference :91-92)
-    val sents = SummarizeOps.sentences(cleaned)
     val k = SummarizeOps.targetSentences(cfg.summaryMaxLength)
-    val summarized = SummarizeOps.extractiveSummary(cleaned, sents, k, ". ", ".")
+    val summarized = SummarizeOps.summarize(cleaned,
+        SummarizeOps.sentenceArray(col("text")), k, ". ", ".")
       .withColumn("summary",
         TextOps.truncateAtWordBoundary(col("summary"), cfg.summaryMaxLength))
     // stages 4-5: topic tags with per-doc TF fallback (reference :205-215)
@@ -48,11 +53,8 @@ object NlpPipeline {
         .agg(transform(array_sort(collect_list(struct(col("tag_rank"), col("tag")))),
           t => t.getField("tag")).as("tags"))
     // stage 6: metrics + assembly
-    val joined = cleaned
-      .join(summarized.select("doc_id", "summary"), Seq("doc_id"))
-      .join(tags, Seq("doc_id"), "left")
-    MetricOps.summaryMetrics(joined, "text", "summary")
-      .join(joined.select(col("doc_id"), col("cleaned_text"),
-        col("processed_text"), col("summary"), col("tags")), Seq("doc_id"))
+    summarized.join(tags, Seq("doc_id"), "left")
+      .select((col("doc_id") +: MetricOps.metricColumns(col("text"), col("summary"))) ++
+        Seq("cleaned_text", "processed_text", "summary", "tags").map(col): _*)
   }
 }

@@ -43,9 +43,13 @@ object Tables {
     * core regardless of `local[32]`. When the scan yields fewer
     * partitions than the session's parallelism, shuffle the (tiny) input
     * once across the cores; at cluster scale a table has orders of
-    * magnitude more row groups than cores and this is a no-op. Filters
-    * and column pruning still reach the scan: Catalyst pushes both
-    * through Repartition.
+    * magnitude more row groups than cores and this is a no-op. Column
+    * pruning still reaches the scan. So do deterministic filters, and that
+    * cuts both ways: Catalyst pushes them below the Repartition, so they
+    * run inside the single-partition scan task, not across the cores. Only
+    * projections and operators above the exchange are spread; an
+    * expensive predicate (a regex quality gate, PII redaction in a filter)
+    * still runs on one core.
     *
     * The relational/event tables deliberately SKIP it (measured: q12-family
     * queries got 1.5-2x slower with it): their queries aggregate or join

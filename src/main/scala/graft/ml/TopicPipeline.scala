@@ -72,9 +72,9 @@ object TopicPipeline {
     // arrays from the cached bytes. Values are unchanged — the persist
     // only shares the computation — so the seeded fit stays reproducible
     // (LdaGoldenSpec).
+    require(cfg.maxDF < 1.0, "maxDF is interpreted as a document fraction")
     val corpus = featurize(docs).select(col("doc_id"), col("terms"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    require(cfg.maxDF < 1.0, "maxDF is interpreted as a document fraction")
     val nDocs = corpus.count().toDouble
     val vocab = corpus
       .select(explode(col("terms")).as("term"), col("doc_id"))

@@ -48,17 +48,22 @@ object MetricOps {
     when(nSentences > 0, nWords.cast("double") / nSentences).otherwise(lit(0.0))
   }
 
-  /** Per-document metrics projection: doc id + the three reference metrics
-    * plus raw lengths (A10/A11/J1/P11). Narrow — no shuffle.
+  /** The raw lengths plus the three reference metrics (A10/A11/J1/P11) of
+    * one document, as named columns for any projection.
+    */
+  def metricColumns(original: Column, summary: Column): Seq[Column] = Seq(
+    length(original).cast("long").as("text_length"),
+    length(summary).cast("long").as("summary_length"),
+    compressionRatio(original, summary).as("compression_ratio"),
+    wordOverlap(original, summary).as("word_overlap"),
+    avgSentenceLength(summary).as("avg_sentence_length"))
+
+  /** Per-document metrics projection: doc id + [[metricColumns]]. Narrow —
+    * no shuffle.
     */
   def summaryMetrics(df: DataFrame, origCol: String, summaryCol: String,
                      idCol: String = "doc_id"): DataFrame =
-    df.select(col(idCol),
-      length(col(origCol)).cast("long").as("text_length"),
-      length(col(summaryCol)).cast("long").as("summary_length"),
-      compressionRatio(col(origCol), col(summaryCol)).as("compression_ratio"),
-      wordOverlap(col(origCol), col(summaryCol)).as("word_overlap"),
-      avgSentenceLength(col(summaryCol)).as("avg_sentence_length"))
+    df.select(col(idCol) +: metricColumns(col(origCol), col(summaryCol)): _*)
 
   /** A9/A13 corpus aggregate over a metrics relation: document count,
     * average lengths, average compression ratio. Averages are computed as

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable
+
 /** Extractive TF-IDF summarization (SURVEY.md §2.4-2.5: P9, A1, A2, T1, T6).
   *
   * Reference behavior (nlp_data_tagging.py:86-116): split a document into
@@ -20,91 +22,159 @@ import org.apache.spark.sql.functions._
   * (no float summation-order sensitivity), so the DuckDB oracle can verify
   * it exactly.
   *
-  * Scale notes: the whole chain is explode → two hash aggregations keyed by
-  * (doc, term) / (doc, sentence) → one window per doc. All shuffles are on
-  * doc-prefixed keys, so data stays well distributed for any number of
-  * documents; no per-document collect, no driver loops. The per-doc window
-  * (top-k) benefits from Spark 4's WindowGroupLimit pushdown.
+  * Scale notes: every statistic is per document, so summarization is one
+  * narrow per-row kernel with no shuffle. A document's sentences are a
+  * per-row `array<string>` ([[sentenceArray]] / [[chunkArray]]), its terms
+  * come from the [[TextOps.cleanTokens]] Column expression inside
+  * `transform`, and only the counting and ranking run as a typed function
+  * ([[sentenceScores]], [[pickSentences]]): one hash-map pass over the
+  * document's terms, then a sort of its sentence indices. [[summarize]]
+  * applies it in a projection over the documents. The relation-shaped
+  * entry points ([[scoreSentences]], [[extractiveSummary]]) group a
+  * sentence relation per document once (one shuffle) and apply the same
+  * kernel, so there is one implementation of the integer scheme.
   */
 object SummarizeOps {
 
-  /** P9: punctuation-based sentence split, reference-exact
+  /** P9 as a per-row array: the reference split
     * (`re.split(r'[.!?]+', text)`, keep trimmed sentences with length > 10;
-    * nlp_data_tagging.py:81-84). Output: one row per kept sentence with
-    * `sentence_id` = 0-based rank within the kept list (the reference indexes
-    * into the filtered list).
+    * nlp_data_tagging.py:81-84). Null text gives an empty array; element i
+    * is the sentence with `sentence_id` i (the reference indexes into the
+    * filtered list).
     */
-  def sentences(docs: DataFrame, textCol: String = "text",
-                idCol: String = "doc_id"): DataFrame = {
-    val raw = docs.select(
-        col(idCol),
-        posexplode(split(coalesce(col(textCol), lit("")), "[.!?]+")).as(Seq("pos", "s")))
-      .select(col(idCol), col("pos"), trim(col("s")).as("sentence"))
-      .where(length(col("sentence")) > 10)
-    val w = Window.partitionBy(idCol).orderBy("pos")
-    raw.select(col(idCol), (row_number().over(w) - 1).cast("long").as("sentence_id"),
-      col("sentence"))
+  def sentenceArray(text: Column): Column =
+    filter(transform(split(coalesce(text, lit("")), "[.!?]+"), s => trim(s)),
+      s => length(s) > 10)
+
+  /** Word chunks as a per-row array: the whitespace tokens
+    * ([[TextOps.tokenize]]) of a document in consecutive `chunkWords`-word
+    * pieces, each joined with single spaces. Null or blank text gives an
+    * empty array. Tokens hold no whitespace, so a greedy match of up to
+    * `chunkWords` space-separated tokens over the re-joined tokens cuts the
+    * chunks in one linear scan, without a lambda over the token array.
+    */
+  def chunkArray(text: Column, chunkWords: Int): Column = {
+    require(chunkWords >= 1, s"chunkWords must be >= 1 (got $chunkWords)")
+    coalesce(
+      regexp_extract_all(array_join(TextOps.tokenize(text), " "),
+        lit(s"\\S+(?: \\S+){0,${chunkWords - 1}}"), lit(0)),
+      array().cast("array<string>"))
   }
 
-  /** Fixture-friendly sentence source: chunk a document's whitespace tokens
-    * into consecutive `chunkWords`-word pseudo-sentences. The driver corpus
-    * has no punctuation (FIXTURES.md documents.text), so punctuation splits
-    * would degenerate to one sentence per doc; chunking exercises the same
-    * downstream scoring/top-k machinery on real data.
+  /** P9: punctuation-based sentence split ([[sentenceArray]]) as a relation:
+    * one row per kept sentence, `sentence_id` = 0-based rank within the
+    * kept list. Narrow.
     */
-  /** Implemented by slicing the token array directly — narrow (no shuffle),
-    * order-safe (no reliance on collect_list intra-group ordering). One
-    * output row per chunk.
+  def sentences(docs: DataFrame, textCol: String = "text",
+                idCol: String = "doc_id"): DataFrame =
+    explodeSentences(docs, sentenceArray(col(textCol)), idCol)
+
+  /** Fixture-friendly sentence source: chunk a document's whitespace tokens
+    * into consecutive `chunkWords`-word pseudo-sentences ([[chunkArray]]).
+    * The fixture corpus has no punctuation (FIXTURES.md documents.text), so
+    * punctuation splits would degenerate to one sentence per doc; chunking
+    * exercises the same downstream scoring/top-k machinery on real data.
+    * One output row per chunk. Narrow.
     */
   def chunks(docs: DataFrame, chunkWords: Int, textCol: String = "text",
-             idCol: String = "doc_id"): DataFrame = {
-    val toks = TextOps.tokenize(col(textCol))
-    // empty docs yield an empty chunk array (posexplode drops them) rather
-    // than a Filter on the computed column — a pushed-down filter would
-    // re-evaluate the tokenize tree inside the Filter (alias substitution)
-    docs.select(col(idCol), toks.as("toks"))
-      .select(col(idCol),
-        posexplode(when(size(col("toks")) > 0, transform(
-          sequence(lit(0), floor((size(col("toks")) - 1) / lit(chunkWords)).cast("int")),
-          i => array_join(slice(col("toks"), i * chunkWords + 1, lit(chunkWords)), " ")))
-          .otherwise(array().cast("array<string>")))
-          .as(Seq("sentence_id", "sentence")))
+             idCol: String = "doc_id"): DataFrame =
+    explodeSentences(docs, chunkArray(col(textCol), chunkWords), idCol)
+
+  private def explodeSentences(docs: DataFrame, sents: Column,
+                               idCol: String): DataFrame =
+    docs.select(col(idCol), posexplode(sents).as(Seq("sentence_id", "sentence")))
       .select(col(idCol), col("sentence_id").cast("long"), col("sentence"))
+
+  /** A1+A2 for one document: the integer TF-IDF score of each sentence,
+    * given each sentence's post-stopword terms (a null entry has none).
+    * Linear in the document's terms: one tf hash map per sentence, one df
+    * hash map per document.
+    */
+  private[ops] def sentenceScores(terms: Seq[Seq[String]]): Array[Long] = {
+    val n = terms.length
+    val tfs = terms.map { ts =>
+      val tf = mutable.HashMap.empty[String, Long]
+      if (ts != null) ts.foreach(t => tf.update(t, tf.getOrElse(t, 0L) + 1L))
+      tf
+    }
+    val df = mutable.HashMap.empty[String, Long]
+    tfs.foreach(_.keysIterator.foreach(t => df.update(t, df.getOrElse(t, 0L) + 1L)))
+    tfs.map(_.foldLeft(0L) { case (acc, (t, c)) =>
+      acc + c * math.floor(1000000.0 * n / df(t)).toLong
+    }).toArray
   }
+
+  /** T1 for one document: the indices of the k top-scoring sentences
+    * (score desc, then earlier sentence first), in document order.
+    */
+  private[ops] def pickSentences(scores: Array[Long], k: Int): Array[Int] =
+    scores.indices.sortWith { (a, b) =>
+      scores(a) > scores(b) || (scores(a) == scores(b) && a < b)
+    }.take(k).sorted.toArray
+
+  /** The picked summary of one document: [[pickSentences]] over
+    * [[sentenceScores]], the sentences joined with `joiner` plus
+    * `terminal`. Null when nothing is picked (k <= 0); a null sentence is
+    * skipped, as `array_join` does.
+    */
+  private def pickedSummary(sents: Seq[String], terms: Seq[Seq[String]], k: Int,
+                            joiner: String, terminal: String): String = {
+    val picked = pickSentences(sentenceScores(terms), k)
+    if (picked.isEmpty) null
+    else picked.flatMap(i => Option(sents(i))).mkString("", joiner, terminal)
+  }
+
+  /** The summary of a row whose sentences are the array attribute `sents`:
+    * the text itself when it has <= k sentences (nlp_data_tagging.py:91-92),
+    * else the picked sentences. `sents` must be a staged attribute: it is
+    * read three times, and Catalyst keeps a multiply-read non-trivial
+    * expression in its own projection rather than inline it.
+    */
+  private def summaryOf(text: Column, sents: Column, k: Int, joiner: String,
+                        terminal: String): Column = {
+    val kernel = udf((ss: Seq[String], ts: Seq[Seq[String]]) =>
+      pickedSummary(ss, ts, k, joiner, terminal))
+    when(size(sents) <= k, text)
+      .otherwise(kernel(sents, transform(sents, s => TextOps.cleanTokens(s))))
+  }
+
+  private val SentsCol = "__summary_sents"
+
+  /** P9→A1→A2→T1 per row, no shuffle: adds `n_sentences` (Long) and
+    * `summary` to every row of `docs`, where `sents` is the row's sentence
+    * array ([[sentenceArray]] or [[chunkArray]] over `textCol`) — one
+    * narrow projection, applied wherever the documents already are.
+    */
+  def summarize(docs: DataFrame, sents: Column, k: Int, joiner: String,
+                terminal: String, textCol: String = "text"): DataFrame =
+    docs.withColumn(SentsCol, sents)
+      .withColumn("n_sentences", size(col(SentsCol)).cast("long"))
+      .withColumn("summary",
+        summaryOf(col(textCol), col(SentsCol), k, joiner, terminal))
+      .drop(SentsCol)
+
+  /** A sentence relation `(doc_id, sentence_id, sentence)` grouped per
+    * document once: `ss` holds the (sentence_id, sentence) structs in
+    * sentence_id order. (doc_id, sentence_id) is the relation's key.
+    */
+  private def perDoc(sents: DataFrame, idCol: String): DataFrame =
+    sents.groupBy(col(idCol))
+      .agg(array_sort(collect_list(struct(col("sentence_id"), col("sentence")))).as("ss"))
 
   /** A1+A2: integer-exact TF-IDF sentence scores over a sentence relation
     * `(doc_id, sentence_id, sentence)`. Terms are the post-stopword tokens
     * (TextOps.cleanTokens); sentences contributing no scored terms get
-    * score 0.
+    * score 0. One shuffle (the per-document grouping), then
+    * [[sentenceScores]].
     */
-  def scoreSentences(sents0: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    // the sentence relation feeds the term explode AND the zero-score
-    // join-back here, plus the caller's n_sent branch (extractiveSummary)
-    // — without a persist the upstream tokenize/chunk chain re-runs per
-    // branch. CacheManager matches canonicalized plans, so every consumer
-    // of the same sentence plan (including other queries in the session
-    // over the same fixture) shares this one cache entry.
-    val sents = graft.CacheScope.persist(sents0)
-    val terms = sents.select(col(idCol), col("sentence_id"),
-        explode(TextOps.cleanTokens(col("sentence"))).as("term"))
-    // tf per (doc, sentence, term)
-    val tf = terms.groupBy(col(idCol), col("sentence_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    // df per (doc, term): number of sentences of the doc containing the term
-    val df = tf.groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("df"))
-    val nSent = sents.groupBy(col(idCol)).agg(count(lit(1)).as("n_sent"))
-    val scored = tf
-      .join(df, Seq(idCol, "term"))
-      .join(nSent, Seq(idCol))
-      .withColumn("w", col("tf") *
-        floor(lit(1000000.0) * col("n_sent") / col("df")).cast("long"))
-      .groupBy(col(idCol), col("sentence_id"))
-      .agg(sum(col("w")).as("score"))
-    // left join back so zero-term sentences keep score 0
-    sents.join(scored, Seq(idCol, "sentence_id"), "left")
-      .select(col(idCol), col("sentence_id"), col("sentence"),
-        coalesce(col("score"), lit(0L)).as("score"))
+  def scoreSentences(sents: DataFrame, idCol: String = "doc_id"): DataFrame = {
+    val scores = udf((ts: Seq[Seq[String]]) => sentenceScores(ts))
+    perDoc(sents, idCol)
+      .select(col(idCol), col("ss"), scores(transform(col("ss").getField("sentence"),
+        s => TextOps.cleanTokens(s))).as("scores"))
+      .select(col(idCol), explode(arrays_zip(col("ss"), col("scores"))).as("z"))
+      .select(col(idCol), col("z.ss.sentence_id").as("sentence_id"),
+        col("z.ss.sentence").as("sentence"), col("z.scores").as("score"))
   }
 
   /** A1 (sklearn-parity variant): TfidfVectorizer-default semantics for
@@ -229,10 +299,13 @@ object SummarizeOps {
         coalesce(col("score"), lit(0.0)).as("score"))
   }
 
-  /** T1 (+ identity case): pick the k top-scoring sentences per doc
-    * (ties → earlier sentence wins, deterministic), emit them joined in
-    * original order. Docs with <= k sentences return the original text
-    * unchanged (nlp_data_tagging.py:91-92).
+  /** T1 (+ identity case) over a sentence relation: pick the k
+    * top-scoring sentences per doc (ties → earlier sentence wins,
+    * deterministic), emit them joined in original order. Docs with <= k
+    * sentences return the original text unchanged (nlp_data_tagging.py:91-92).
+    * Groups the relation per document once and applies the kernel of
+    * [[summarize]]; callers that hold the documents use [[summarize]]
+    * directly and skip the grouping and the join back.
     *
     * @param joiner separator used when stitching selected sentences —
     *               ". " with trailing "." for punctuation sentences
@@ -242,24 +315,12 @@ object SummarizeOps {
                         joiner: String, terminal: String,
                         textCol: String = "text",
                         idCol: String = "doc_id"): DataFrame = {
-    val byScore = Window.partitionBy(idCol)
-      .orderBy(col("score").desc, col("sentence_id").asc)
-    val picked = scoreSentences(sents, idCol)
-      .withColumn("rk", row_number().over(byScore))
-      .where(col("rk") <= k)
-    val summaries = picked
-      .groupBy(col(idCol))
-      .agg(
-        concat(array_join(array_sort(collect_list(struct(col("sentence_id"), col("sentence"))))
-          .getField("sentence"), joiner), lit(terminal)).as("picked_summary"),
-        count(lit(1)).as("n_picked"))
-    val nSent = sents.groupBy(col(idCol)).agg(count(lit(1)).as("n_sentences"))
-    docs.join(nSent, Seq(idCol), "left")
-      .join(summaries, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_sentences"), lit(0L)).as("n_sentences"),
-        when(coalesce(col("n_sentences"), lit(0L)) <= k, col(textCol))
-          .otherwise(col("picked_summary")).as("summary"))
+    val grouped = perDoc(sents, idCol)
+      .select(col(idCol), col("ss").getField("sentence").as("__grouped"))
+    summarize(docs.join(grouped, Seq(idCol), "left"),
+        coalesce(col("__grouped"), array().cast("array<string>")),
+        k, joiner, terminal, textCol)
+      .select(col(idCol), col("n_sentences"), col("summary"))
   }
 
   /** The reference `summarize_text` length policy (nlp_data_tagging.py:118-130):

@@ -152,6 +152,84 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // Punctuated documents for the summary kernel: a five-word content
+  // vocabulary forces repeated terms and score ties, a pool of three
+  // sentences per doc repeats whole sentences, stop-word-only and
+  // short-token sentences score 0, and non-ASCII words go through the same
+  // lower/length rules. Null and empty texts and docs with fewer than k
+  // sentences ride along.
+  private val summaryWordGen: Gen[String] = Gen.frequency(
+    5 -> Gen.oneOf("alpha", "beta", "gamma", "delta", "epsilon"),
+    3 -> Gen.oneOf(TextOps.StopWords),
+    1 -> Gen.oneOf("café", "Naïve", "ΩMEGA", "日本語文", "straße"),
+    1 -> Gen.oneOf("x", "ab", "QZ"))
+
+  private val summarySentenceGen: Gen[String] = for {
+    n <- Gen.choose(1, 8)
+    ws <- Gen.listOfN(n, summaryWordGen)
+  } yield ws.mkString(" ")
+
+  private val punctDocGen: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(""),
+    14 -> (for {
+      n <- Gen.choose(0, 12)
+      pool <- Gen.listOfN(3, summarySentenceGen)
+      ss <- Gen.listOfN(n, Gen.frequency(1 -> Gen.oneOf(pool), 1 -> summarySentenceGen))
+      ends <- Gen.listOfN(n, Gen.oneOf(".", "!", "?", "...", "?!"))
+    } yield ss.zip(ends).map { case (t, e) => t + e }.mkString(" ")))
+
+  private lazy val punctDocs = sample(punctDocGen).zipWithIndex
+    .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+
+  private def byDoc(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.orderBy("doc_id").collect().toSeq
+
+  test("summary kernel equals the relational chain on generated punctuated docs") {
+    val refSents = RelationalSummary.sentences(punctDocs)
+    assert(byDoc(SummarizeOps.sentences(punctDocs).orderBy("doc_id", "sentence_id")) ==
+      byDoc(refSents.orderBy("doc_id", "sentence_id")))
+    Seq(1, 2, 3, 7).foreach { k =>
+      val ref = byDoc(RelationalSummary.extractiveSummary(punctDocs, refSents, k, ". ", "."))
+      val adapter = byDoc(SummarizeOps.extractiveSummary(
+        punctDocs, SummarizeOps.sentences(punctDocs), k, ". ", "."))
+      val kernel = byDoc(SummarizeOps.summarize(punctDocs,
+          SummarizeOps.sentenceArray(col("text")), k, ". ", ".")
+        .select("doc_id", "n_sentences", "summary"))
+      assert(adapter == ref, s"adapter, k=$k")
+      assert(kernel == ref, s"kernel, k=$k")
+      assert(ref.count(_.getLong(1) > k) > 20, s"degenerate corpus at k=$k")
+      assert(ref.exists(_.isNullAt(2)) && ref.exists(_.getLong(1) == 0L))
+    }
+  }
+
+  test("scoreSentences equals the relational chain, ties and sparse ids included") {
+    // sentence ids need not be contiguous: the kernel orders by them
+    val sents = RelationalSummary.sentences(punctDocs)
+      .withColumn("sentence_id", col("sentence_id") * 3 + 5)
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id", "sentence_id")
+        .as[(Long, Long, String, Long)].collect().toSeq
+    val ref = scores(RelationalSummary.scoreSentences(sents))
+    assert(scores(SummarizeOps.scoreSentences(sents)) == ref)
+    val perDoc = ref.groupBy(_._1).values
+    assert(perDoc.exists(ss => ss.map(_._4).distinct.size < ss.size), "no score ties")
+    assert(ref.exists(_._4 == 0L), "no zero-score sentence")
+  }
+
+  test("chunk kernel equals the relational chunking and chunk summaries") {
+    val docs = (sample(textGen) ++ Seq(null, "", "  \t ", "one"))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    Seq(1, 3, 8).foreach { w =>
+      val ref = RelationalSummary.chunks(docs, w)
+      assert(SummarizeOps.chunks(docs, w).orderBy("doc_id", "sentence_id").collect().toSeq ==
+        ref.orderBy("doc_id", "sentence_id").collect().toSeq, s"chunks, w=$w")
+      val want = byDoc(RelationalSummary.extractiveSummary(docs, ref, 2, " ", ""))
+      assert(byDoc(SummarizeOps.summarize(docs, SummarizeOps.chunkArray(col("text"), w),
+        2, " ", "").select("doc_id", "n_sentences", "summary")) == want, s"summary, w=$w")
+    }
+  }
+
   test("compression ratio is in (0,1] for non-empty summaries no longer than text") {
     val rows = sample(for {
       t <- textGen.suchThat(_.nonEmpty)

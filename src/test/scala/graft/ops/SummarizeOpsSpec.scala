@@ -107,6 +107,28 @@ class SummarizeOpsSpec extends SparkSpec {
     assert(scores(1)._4 > 0L)
   }
 
+  test("kernel scores: tf x floor(1e6 n/df), ties ranked by position") {
+    // n=3; "alpha" in 2 sentences (idf 1500000), "beta"/"gamma" in 1 (3000000)
+    val scores = SummarizeOps.sentenceScores(Seq(
+      Seq("alpha", "alpha", "beta"), Seq("gamma"), null, Seq("alpha")))
+    assert(scores.toSeq == Seq(2L * 2000000L + 4000000L, 4000000L, 0L, 2000000L))
+    assert(SummarizeOps.pickSentences(Array(5L, 7L, 5L, 7L), 3).toSeq == Seq(0, 1, 3))
+    assert(SummarizeOps.pickSentences(Array(1L, 2L), 5).toSeq == Seq(0, 1))
+    assert(SummarizeOps.pickSentences(Array(1L, 2L), 0).isEmpty)
+  }
+
+  test("summarize runs no shuffle, window or collect_list over sentences") {
+    val docs = Seq((1L, "Alpha beta gamma delta. Epsilon alpha zeta eta! Theta iota kappa?"))
+      .toDF("doc_id", "text")
+    val out = SummarizeOps.summarize(docs, SummarizeOps.sentenceArray(col("text")),
+      1, ". ", ".")
+    val plan = out.queryExecution.executedPlan.toString
+    Seq("Exchange", "Window", "ObjectHashAggregate", "SortAggregate", "HashAggregate")
+      .foreach(op => assert(!plan.contains(op), s"$op in\n$plan"))
+    assert(out.select("n_sentences", "summary").as[(Long, String)].collect().toSeq ==
+      Seq((3L, "Alpha beta gamma delta.")))
+  }
+
   test("LnTable SQL serialization round-trips to the exact JVM doubles") {
     // engine-independence of the q03d oracle rests on the oracle's
     // string→DOUBLE cast (correctly-rounded parse) reproducing the JVM's
