@@ -22,9 +22,10 @@ import org.apache.spark.storage.StorageLevel
   * discards its only copy of the data, so the FINAL checkpoint of a loop
   * must live until the query boundary, not the end of the loop.
   *
-  * Memoized model caches (TopicQueries, SimilarityQueries' IVF index) are
-  * deliberately NOT query-scoped — they exist to share a fit across
-  * queries — and expose their own evictAll() instead.
+  * Session memos ([[graft.queries.Memo]]: the LDA fit, the IVF index, the
+  * shared shingle/summary relations) are deliberately NOT query-scoped —
+  * they exist to share work across queries — and are released by
+  * [[graft.queries.SessionMemos.evictAll]] instead.
   *
   * CONCURRENCY CONTRACT: the registry is process-global, so releaseAll()
   * drains registrations from ALL threads — it assumes the

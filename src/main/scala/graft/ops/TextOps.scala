@@ -32,8 +32,6 @@ object TextOps {
     "not", "only", "own", "same", "so", "than", "too", "very", "can", "will", "just",
     "should", "now")
 
-  private val stopArray: Column = typedlit(StopWords)
-
   /** P1: collapse runs of whitespace to a single space. */
   def collapseWhitespace(c: Column): Column = regexp_replace(c, "\\s+", " ")
 
@@ -60,10 +58,12 @@ object TextOps {
 
   /** P7: drop token if lowercase form is a stop word OR its original length
     * is <= 2 (length check on the raw token, stop check on the lowered one —
-    * nlp_data_tagging.py:72-75).
+    * nlp_data_tagging.py:72-75). Catalyst's OptimizeIn turns the `isin`
+    * over this many literals into a hash-set `InSet`: one lookup per token
+    * inside the (interpreted) lambda, not a scan of the whole list.
     */
   def removeStopAndShort(tokens: Column): Column =
-    filter(tokens, t => (length(t) > 2) && !array_contains(stopArray, lower(t)))
+    filter(tokens, t => (length(t) > 2) && !lower(t).isin(StopWords: _*))
 
   /** P6-P8 composed: the reference `simple_tokenize` (string in, string out). */
   def cleanTokensText(c: Column): Column =

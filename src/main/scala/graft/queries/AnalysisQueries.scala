@@ -508,40 +508,13 @@ object AnalysisQueries {
   /** One training run per (application, fixture), shared by q87 (the
     * table itself) and q87c (tokenizing with it) — the production
     * lifecycle: train once, apply everywhere. The memo holds driver-side
-    * rows (a few KB), no executor storage; [[evictAll]] clears it so the
-    * bench's cold pass genuinely retrains.
+    * rows (a few KB), no executor storage; [[SessionMemos.evictAll]]
+    * clears it so the bench's cold pass genuinely retrains.
     */
-  private val trainedCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[org.apache.spark.sql.Row]]()
-
-  private def trainedMerges(spark: SparkSession,
-                            dir: String): Seq[org.apache.spark.sql.Row] = {
-    trainedCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    trainedCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        graft.ops.BpeTrainOps.train(spark, Tables.documents(spark, d),
-          numMerges = BpeTrainMerges, minPairCount = BpeTrainMinPair,
-          maxVocab = BpeTrainMaxVocab).orderBy("rank").collect().toSeq
-      })
-  }
-
-  /** Drop the memoized trained table (driver-side only, nothing
-    * persisted) — cross-query by design, evicted at session end or by
-    * the bench's cold pass.
-    */
-  def evictAll(): Unit = {
-    trainedCache.clear(); unigramCache.clear(); wpCache.clear()
-    mixtureCache.clear(); bucketsCache.clear(); driftCache.clear()
-    nbCache.clear(); perceptronCache.clear()
-    Seq(tokedCache, uniPostCache, bigramCtCache, lowerPostCache).foreach {
-      cache =>
-        val it = cache.values.iterator()
-        while (it.hasNext) {
-          it.next().unpersist(blocking = false)
-          it.remove()
-        }
-    }
-  }
+  private val trainedMerges = Memo((spark, d) =>
+    graft.ops.BpeTrainOps.train(spark, Tables.documents(spark, d),
+      numMerges = BpeTrainMerges, minPairCount = BpeTrainMinPair,
+      maxVocab = BpeTrainMaxVocab).orderBy("rank").collect().toSeq)
 
   def q87BpeTrain(spark: SparkSession, dir: String): DataFrame =
     spark.createDataFrame(
@@ -578,20 +551,12 @@ object AnalysisQueries {
   val WpTrainMerges: Int = 24
   val WpTrainMinPair: Long = 4L
 
-  private val wpCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Seq[(String, Long)], Seq[(Int, String, String, String, Long, Long, Long)])]()
-
-  private def trainedWordPiece(spark: SparkSession, dir: String)
-      : (Seq[(String, Long)], Seq[(Int, String, String, String, Long, Long, Long)]) = {
-    wpCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    wpCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        val vocab = graft.ops.BpeTrainOps
-          .wordVocab(Tables.documents(spark, d), BpeTrainMaxVocab)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        (vocab, graft.ops.WordPieceTrainOps.trainLocal(
-          vocab, WpTrainMerges, WpTrainMinPair))
-      })
+  private val trainedWordPiece = Memo { (spark, d) =>
+    val vocab = graft.ops.BpeTrainOps
+      .wordVocab(Tables.documents(spark, d), BpeTrainMaxVocab)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    (vocab, graft.ops.WordPieceTrainOps.trainLocal(
+      vocab, WpTrainMerges, WpTrainMinPair))
   }
 
   def q87dWordpieceTrain(spark: SparkSession, dir: String): DataFrame = {
@@ -631,19 +596,11 @@ object AnalysisQueries {
   // force, expression/driver parity, and EM likelihood monotonicity.
   val UnigramTargetVocab: Int = 96
 
-  private val unigramCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[graft.ops.UnigramLmOps.Piece]]()
-
-  private def trainedUnigram(spark: SparkSession,
-                             dir: String): Seq[graft.ops.UnigramLmOps.Piece] = {
-    unigramCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    unigramCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        val vocab = graft.ops.BpeTrainOps
-          .wordVocab(Tables.documents(spark, d), BpeTrainMaxVocab)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        graft.ops.UnigramLmOps.trainLocal(vocab, UnigramTargetVocab)
-      })
+  private val trainedUnigram = Memo { (spark, d) =>
+    val vocab = graft.ops.BpeTrainOps
+      .wordVocab(Tables.documents(spark, d), BpeTrainMaxVocab)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    graft.ops.UnigramLmOps.trainLocal(vocab, UnigramTargetVocab)
   }
 
   def q115UnigramTrain(spark: SparkSession, dir: String): DataFrame = {
@@ -894,11 +851,11 @@ object AnalysisQueries {
     * as independent programs each re-derived the full quality + shingle-
     * uniqueness chain (~4 s each at sf0.1). The memo holds the S
     * collected rows driver-side (scalar-bounded: one row per source, the
-    * trainedCache precedent); [[evictAll]] clears it so the bench's cold
-    * pass genuinely re-derives.
+    * trainedMerges precedent); [[SessionMemos.evictAll]] clears it so the
+    * bench's cold pass genuinely re-derives.
     */
-  private val mixtureCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[org.apache.spark.sql.Row]]()
+  private val mixtureRows =
+    Memo((spark, d) => mixtureWeightsLive(spark, d).collect().toSeq)
 
   private val MixtureSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("source",
@@ -912,15 +869,10 @@ object AnalysisQueries {
     org.apache.spark.sql.types.StructField("weight_permille",
       org.apache.spark.sql.types.LongType, nullable = true)))
 
-  def q146MixtureWeights(spark: SparkSession, dir: String): DataFrame = {
-    mixtureCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    val rows = mixtureCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      { case (_, d) => mixtureWeightsLive(spark, d).collect().toSeq })
+  def q146MixtureWeights(spark: SparkSession, dir: String): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), MixtureSchema)
+      spark.sparkContext.parallelize(mixtureRows(spark, dir), 1), MixtureSchema)
       .orderBy("source")
-  }
 
   // lazy: composes DedupQueries.shingleCte, and DedupQueries' own init
   // chain reaches back into this object (via CurationQueries) — an eager
@@ -1476,10 +1428,10 @@ object AnalysisQueries {
   // Session memo for the bucket table: TWO registry queries consume it
   // (q172 emits it, q175's datasheet restates its shares) and each would
   // re-run the corpus-scoring chain as an independent program. ≤ 3S
-  // collected rows, the mixtureCache bound; evictAll clears it so the
-  // bench's cold pass genuinely re-scores.
-  private val bucketsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[org.apache.spark.sql.Row]]()
+  // collected rows, the mixtureRows bound; SessionMemos.evictAll clears
+  // it so the bench's cold pass genuinely re-scores.
+  private val bucketsRows =
+    Memo((spark, d) => perplexityBucketsLive(spark, d).collect().toSeq)
 
   private val BucketsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("source",
@@ -1495,15 +1447,10 @@ object AnalysisQueries {
     org.apache.spark.sql.types.StructField("doc_share_permille",
       org.apache.spark.sql.types.LongType, nullable = true)))
 
-  def q172PerplexityBuckets(spark: SparkSession, dir: String): DataFrame = {
-    bucketsCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    val rows = bucketsCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      { case (_, d) => perplexityBucketsLive(spark, d).collect().toSeq })
+  def q172PerplexityBuckets(spark: SparkSession, dir: String): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), BucketsSchema)
+      spark.sparkContext.parallelize(bucketsRows(spark, dir), 1), BucketsSchema)
       .orderBy("source", "bucket")
-  }
 
   /** `(id, source, n_bigrams, mean_micro)` of `docs` scored under a
     * prebuilt [[TextAnalysisOps.bigramModel]] — the shared means
@@ -1736,12 +1683,12 @@ object AnalysisQueries {
         .as(s"tail_${side}_permille"))
 
   /** Session memo for the drift report: q172b emits it and q175's
-    * datasheet restates its verdict; S collected rows, the mixtureCache
-    * bound. [[evictAll]] clears it for the cold pass (the stored
-    * artifacts deliberately survive — they are the warehouse).
+    * datasheet restates its verdict; S collected rows, the mixtureRows
+    * bound. [[SessionMemos.evictAll]] clears it for the cold pass (the
+    * stored artifacts deliberately survive — they are the warehouse).
     */
-  private val driftCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[org.apache.spark.sql.Row]]()
+  private val driftRows =
+    Memo((spark, d) => bucketDriftLive(spark, d).collect().toSeq)
 
   private val DriftSchema = org.apache.spark.sql.types.StructType(
     Seq("source" -> org.apache.spark.sql.types.StringType,
@@ -1754,15 +1701,10 @@ object AnalysisQueries {
     ).map { case (n, t) =>
       org.apache.spark.sql.types.StructField(n, t, nullable = true) })
 
-  def q172bBucketDrift(spark: SparkSession, dir: String): DataFrame = {
-    driftCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    val rows = driftCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      { case (_, d) => bucketDriftLive(spark, d).collect().toSeq })
+  def q172bBucketDrift(spark: SparkSession, dir: String): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), DriftSchema)
+      spark.sparkContext.parallelize(driftRows(spark, dir), 1), DriftSchema)
       .orderBy("source")
-  }
 
   private def bucketDriftLive(spark: SparkSession, dir: String): DataFrame = {
     import CurationQueries.Snapshots
@@ -2743,28 +2685,20 @@ object AnalysisQueries {
   // plus their agreement mass, all integer.
   // Session memo: the ≤TrainedBuckets-row weight table (2^15 rows ≈ a
   // few hundred KB collected) has four registry consumers; cleared by
-  // evictAll so the cold pass genuinely retrains.
+  // SessionMemos.evictAll so the cold pass genuinely retrains.
   val InDomainLang = "en"
 
   private def inDomainLabeled(spark: SparkSession, dir: String): DataFrame =
     TextAnalysisOps.langLabeled(Tables.documents(spark, dir), InDomainLang)
-  private val nbCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[org.apache.spark.sql.Row]]()
 
   private val NbSchema = org.apache.spark.sql.types.StructType(
     Seq("bucket", "n_good", "n_bad", "weight").map(n =>
       org.apache.spark.sql.types.StructField(n,
         org.apache.spark.sql.types.LongType, nullable = true)))
 
-  private def nbWeightRows(spark: SparkSession,
-                           dir: String): Seq[org.apache.spark.sql.Row] = {
-    nbCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    nbCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        TextAnalysisOps.nbTrainedWeights(inDomainLabeled(spark, d))
-          .orderBy("bucket").collect().toSeq
-      })
-  }
+  private val nbWeightRows = Memo((spark, d) =>
+    TextAnalysisOps.nbTrainedWeights(inDomainLabeled(spark, d))
+      .orderBy("bucket").collect().toSeq)
 
   private def nbFrame(spark: SparkSession, dir: String): DataFrame =
     spark.createDataFrame(
@@ -3282,18 +3216,9 @@ object AnalysisQueries {
   // golden replay + learning-beats-surrogate gates in ClassifierTrainSpec.
   // q178b publishes the same promotion row shape as q177c for the
   // trained-vs-surrogate comparison under battery labels.
-  private val perceptronCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[org.apache.spark.sql.Row]]()
-
-  private def perceptronRows(spark: SparkSession,
-                             dir: String): Seq[org.apache.spark.sql.Row] = {
-    perceptronCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    perceptronCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        graft.ops.ClassifierTrainOps.train(spark, inDomainLabeled(spark, d))
-          .orderBy("bucket").collect().toSeq
-      })
-  }
+  private val perceptronRows = Memo((spark, d) =>
+    graft.ops.ClassifierTrainOps.train(spark, inDomainLabeled(spark, d))
+      .orderBy("bucket").collect().toSeq)
 
   private def perceptronFrame(spark: SparkSession, dir: String): DataFrame =
     spark.createDataFrame(
@@ -3392,65 +3317,41 @@ object AnalysisQueries {
   // corpus (and four re-derived the per-doc bigram counts) inside their
   // own plans — the ~0.12 s/stage fixed overhead × the repeated
   // scan+tokenize+aggregate stages was the family's entire gap over its
-  // reference rows. The shingle/pairs memo pattern (DedupQueries.memoIn)
-  // applied here: ONE persisted tokenized relation, with the unigram
-  // postings, per-doc bigram counts, and lowercased postings derived
-  // relations memoized on top of it. Per (application, fixture),
-  // released via evictAll so the bench's cold pass genuinely
-  // re-tokenizes.
-  private val tokedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private val uniPostCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private val bigramCtCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private val lowerPostCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def memoDf(cache: java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame],
-                     spark: SparkSession, dir: String)
-                    (build: String => DataFrame): DataFrame = {
-    cache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    cache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        build(d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-  }
+  // reference rows. The shingle/pairs memo pattern (DedupQueries'
+  // shingled/jpairs) applied here: ONE persisted tokenized relation, with
+  // the unigram postings, per-doc bigram counts, and lowercased postings
+  // derived relations memoized on top of it.
 
   /** `(doc_id, text, toks)` of the documents table, tokenized once. */
-  private[queries] def tokedDocs(spark: SparkSession, dir: String): DataFrame =
-    memoDf(tokedCache, spark, dir)(d =>
-      Tables.documents(spark, d).select(col("doc_id"), col("text"),
-        TextOps.tokenize(coalesce(col("text"), lit(""))).as("toks")))
+  private[queries] val tokedDocs: Memo[DataFrame] = Memo.frame((spark, d) =>
+    Tables.documents(spark, d).select(col("doc_id"), col("text"),
+      TextOps.tokenize(coalesce(col("text"), lit(""))).as("toks")))
 
   /** `(doc_id, tok, tf)` unigram postings (q70's probe+vocab relation). */
-  private def uniPostings(spark: SparkSession, dir: String): DataFrame =
-    memoDf(uniPostCache, spark, dir)(d =>
-      tokedDocs(spark, d)
-        .select(col("doc_id"), explode(col("toks")).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
+  private val uniPostings = Memo.frame((spark, d) =>
+    tokedDocs(spark, d)
+      .select(col("doc_id"), explode(col("toks")).as("tok"))
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
 
   /** `(doc_id, w1, w2, k)` per-doc bigram counts — q70b/q90/q90b/q90c
     * all start from this one aggregate.
     */
-  private[queries] def bigramDocCounts(spark: SparkSession, dir: String): DataFrame =
-    memoDf(bigramCtCache, spark, dir)(d =>
-      TextAnalysisOps.bigramPairsOf(
-        tokedDocs(spark, d).select(col("doc_id"), col("toks")),
-        Seq(col("doc_id")))
-        .groupBy(col("doc_id"), col("w1"), col("w2"))
-        .agg(count(lit(1)).as("k")))
+  private[queries] val bigramDocCounts: Memo[DataFrame] = Memo.frame((spark, d) =>
+    TextAnalysisOps.bigramPairsOf(
+      tokedDocs(spark, d).select(col("doc_id"), col("toks")),
+      Seq(col("doc_id")))
+      .groupBy(col("doc_id"), col("w1"), col("w2"))
+      .agg(count(lit(1)).as("k")))
 
   /** `(doc_id, term, tf)` lowercased postings (q118). Deriving via
     * `lower(tok)` from the shared toks is exact — lowercasing never
     * creates or removes whitespace (TextAnalysisSpec property gate).
     */
-  private def lowerPostings(spark: SparkSession, dir: String): DataFrame =
-    memoDf(lowerPostCache, spark, dir)(d =>
-      tokedDocs(spark, d)
-        .select(col("doc_id"), explode(transform(col("toks"),
-          t => lower(t))).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
+  private val lowerPostings = Memo.frame((spark, d) =>
+    tokedDocs(spark, d)
+      .select(col("doc_id"), explode(transform(col("toks"),
+        t => lower(t))).as("term"))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
 
   private[queries] def tokedIds(spark: SparkSession, dir: String): DataFrame =
     tokedDocs(spark, dir).select(col("doc_id"))

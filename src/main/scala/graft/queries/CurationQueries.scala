@@ -16,12 +16,9 @@ object CurationQueries {
   /** One MATERIALIZED stages-1-3 relation (redact → quality gate → exact
     * dedup) per (application, fixture dir): q50 and q50b differ only in
     * their stage-4 retention policy, and as independent programs each
-    * would recompute the shared prefix. Same pattern and lifecycle as
-    * NlpQueries' summary cache — applicationId-keyed (stale sessions
-    * evicted on sight), cross-query by design, released via [[evictAll]].
+    * would recompute the shared prefix. A session [[Memo]], like
+    * NlpQueries' summary relation.
     */
-  private val exactCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
 
   /** Bump when the redaction patterns, quality gate, tokenizer, or exact
     * dedup rule change SEMANTICS (fingerprint sees files + constants,
@@ -29,27 +26,20 @@ object CurationQueries {
     */
   private val ExactStoreVersion = "2" // r12: exact stage keyed on contentKey
 
-  private[graft] def exactDf(spark: SparkSession, dir: String): DataFrame = {
-    exactCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    exactCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        // stages 1-3 ARE the "cleaned corpus" a production pipeline
-        // materializes once and serves to every downstream consumer —
-        // the same maintained-table argument as the pair indexes
-        graft.sources.StoredRelations.readOrBuild(spark, "curation_exact",
-          Seq(s"$d/documents.parquet"), ExactStoreVersion)(
-          CurationPipeline.exactStage(Tables.documents(spark, d)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+  private[graft] val exactDf: Memo[DataFrame] = Memo.frame { (spark, d) =>
+    // stages 1-3 ARE the "cleaned corpus" a production pipeline
+    // materializes once and serves to every downstream consumer — the
+    // same maintained-table argument as the pair indexes
+    graft.sources.StoredRelations.readOrBuild(spark, "curation_exact",
+      Seq(s"$d/documents.parquet"), ExactStoreVersion)(
+      CurationPipeline.exactStage(Tables.documents(spark, d)))
   }
 
   /** The near-dup PAIRS relation memoized alongside the prefix: q50 and
     * q50b consume the SAME pairs (drop-list vs cluster retention), and as
     * independent programs each would re-shingle and re-join. Tiny frame
-    * (one row per near-dup pair), same lifecycle as [[exactCache]].
+    * (one row per near-dup pair), same lifecycle as [[exactDf]].
     */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
 
   /** Bump when the curation prefix (redaction patterns, quality gate,
     * tokenizer) or pair generation changes SEMANTICS — the stored
@@ -60,47 +50,21 @@ object CurationQueries {
     s"1:n=${CurationPipeline.ShingleN},min=${CurationPipeline.NearDupMinMicro}," +
       s"cap=${CurationPipeline.MaxShingleDf}"
 
-  private[graft] def pairsDf(spark: SparkSession, dir: String): DataFrame = {
-    pairsCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    pairsCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        graft.sources.StoredRelations.readOrBuild(spark, "curation_pairs",
-          Seq(s"$d/documents.parquet"), PairsStoreVersion)(
-          CurationPipeline.nearDupPairs(exactDf(spark, d),
-            CurationPipeline.MaxShingleDf))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+  private[graft] val pairsDf: Memo[DataFrame] = Memo.frame { (spark, d) =>
+    graft.sources.StoredRelations.readOrBuild(spark, "curation_pairs",
+      Seq(s"$d/documents.parquet"), PairsStoreVersion)(
+      CurationPipeline.nearDupPairs(exactDf(spark, d),
+        CurationPipeline.MaxShingleDf))
   }
 
   /** The per-doc DSIR weights relation memoized for the q97 family: q97
     * reports the scores, q97b selects by them — as independent programs
     * each would re-explode the corpus' n-gram instances. One narrow row
-    * per doc, same lifecycle as [[exactCache]].
+    * per doc, same lifecycle as [[exactDf]].
     */
-  private val dsirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def dsirDf(spark: SparkSession, dir: String): DataFrame = {
-    dsirCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    dsirCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        TextAnalysisOps.dsirWeights(
-          Tables.documents(spark, d), col("lang") === "en", DsirBuckets)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-  }
-
-  /** Drop every memoized curation relation and release its storage. */
-  def evictAll(): Unit = {
-    Seq(exactCache, pairsCache, dsirCache).foreach { cache =>
-      val it = cache.values.iterator()
-      while (it.hasNext) {
-        it.next().unpersist(blocking = false)
-        it.remove()
-      }
-    }
-    mwCache.clear()
-  }
+  private val dsirDf = Memo.frame((spark, d) =>
+    TextAnalysisOps.dsirWeights(
+      Tables.documents(spark, d), col("lang") === "en", DsirBuckets))
 
   def q50CuratedCorpus(spark: SparkSession, dir: String): DataFrame =
     CurationPipeline.curateFromPairs(exactDf(spark, dir), pairsDf(spark, dir))
@@ -2142,16 +2106,13 @@ object CurationQueries {
 
   /** Session memo for the MW trace: q174 emits it and q175's datasheet
     * restates its final iteration; (T+1)·S collected rows, the
-    * mixtureCache bound. [[evictAll]] clears it for the cold pass.
+    * mixture-weights bound.
     */
-  private val mwCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Long, String, Long, Long)]]()
+  private val mwTrace = Memo(mwTraceLive _)
 
   def q174DomainReweight(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    mwCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    mwCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) => mwTraceLive(spark, d) })
+    mwTrace(spark, dir)
       .toDF("iter", "source", "excess_norm", "weight_permille")
       .orderBy("iter", "source")
   }

@@ -34,27 +34,11 @@ object DedupQueries {
     * queries consume the IDENTICAL per-doc-distinct shingle relation at
     * [[ShingleN]], and three (q25/q55/q55b) the identical Jaccard-pairs
     * relation on top of it — as independent programs each re-tokenized
-    * and re-joined the corpus. Memoized per (application, fixture dir),
-    * stale applications evicted on sight, released via [[evictAll]].
+    * and re-joined the corpus. Memoized per (application, fixture dir)
+    * (see [[Memo]]).
     */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private val jpairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def memoIn(cache: java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame],
-                     spark: SparkSession, dir: String)
-                    (build: String => DataFrame): DataFrame = {
-    cache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    cache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        build(d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-  }
-
-  private def shingled(spark: SparkSession, dir: String): DataFrame =
-    memoIn(shingleCache, spark, dir)(d =>
-      DedupOps.shingles(tokenized(spark, d), ShingleN))
+  private val shingled = Memo.frame((spark, d) =>
+    DedupOps.shingles(tokenized(spark, d), ShingleN))
 
   /** Bump when [[DedupOps.jaccardPairs]]/[[DedupOps.shingles]]/
     * [[TextOps.tokenize]] change SEMANTICS — the stored artifact's
@@ -63,11 +47,10 @@ object DedupQueries {
     */
   private val JpairsStoreVersion = s"1:n=$ShingleN,min=$JaccardMinMicro"
 
-  private[graft] def jpairs(spark: SparkSession, dir: String): DataFrame =
-    memoIn(jpairsCache, spark, dir)(d =>
-      graft.sources.StoredRelations.readOrBuild(spark, "dedup_jpairs",
-        Seq(s"$d/documents.parquet"), JpairsStoreVersion)(
-        DedupOps.jaccardPairs(shingled(spark, d), JaccardMinMicro)))
+  private[graft] val jpairs: Memo[DataFrame] = Memo.frame((spark, d) =>
+    graft.sources.StoredRelations.readOrBuild(spark, "dedup_jpairs",
+      Seq(s"$d/documents.parquet"), JpairsStoreVersion)(
+      DedupOps.jaccardPairs(shingled(spark, d), JaccardMinMicro)))
 
   /** The cluster-LABELS relation, stored like the pairs it derives from:
     * in production the labels table is maintained infrastructure — q55c
@@ -83,26 +66,11 @@ object DedupQueries {
     */
   private val LabelsStoreVersion = s"1:pairs=$JpairsStoreVersion"
 
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private[queries] def dupLabels(spark: SparkSession, dir: String): DataFrame =
-    memoIn(labelsCache, spark, dir)(d =>
-      graft.sources.StoredRelations.readOrBuild(spark, "dedup_labels",
-        Seq(s"$d/documents.parquet"), LabelsStoreVersion)(
-        DedupOps.duplicateClusters(Tables.documents(spark, d),
-          jpairs(spark, d))))
-
-  /** Drop every memoized dedup relation and release its storage. */
-  def evictAll(): Unit = {
-    Seq(shingleCache, jpairsCache, labelsCache).foreach { cache =>
-      val it = cache.values.iterator()
-      while (it.hasNext) {
-        it.next().unpersist(blocking = false)
-        it.remove()
-      }
-    }
-  }
+  private[queries] val dupLabels: Memo[DataFrame] = Memo.frame((spark, d) =>
+    graft.sources.StoredRelations.readOrBuild(spark, "dedup_labels",
+      Seq(s"$d/documents.parquet"), LabelsStoreVersion)(
+      DedupOps.duplicateClusters(Tables.documents(spark, d),
+        jpairs(spark, d))))
 
   // --- q24: exact duplicate groups ---------------------------------------
   def q24ExactDup(spark: SparkSession, dir: String): DataFrame =

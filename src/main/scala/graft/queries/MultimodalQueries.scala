@@ -174,28 +174,9 @@ object MultimodalQueries {
     * per-payload DCT hash is the expensive stage, and a query-scoped
     * persist would make q60e recompute it after q60c just finished
     * (measured 2.65 s warm — the registry's top warm query before the
-    * memo). Released via [[evictAll]] / SessionMemos.
+    * memo). Released by [[SessionMemos.evictAll]].
     */
-  private val phashPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** Drop the memoized pair relation and release its storage. */
-  def evictAll(): Unit = {
-    val it = phashPairsCache.values.iterator()
-    while (it.hasNext) {
-      it.next().unpersist(blocking = false)
-      it.remove()
-    }
-  }
-
-  private def phashPairs(spark: SparkSession, dir: String): DataFrame = {
-    phashPairsCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    phashPairsCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        phashPairsBuild(spark, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-  }
+  private val phashPairs = Memo.frame(phashPairsBuild _)
 
   private def phashPairsBuild(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.PHash

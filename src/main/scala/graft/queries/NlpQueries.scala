@@ -104,36 +104,13 @@ object NlpQueries {
     * per-row summary kernel over 8-word chunks), but recomputing it per
     * query still costs ~0.4-1.1 s warm each at sf0.1 on 4 cores (q03 0.20
     * → 1.28 s, q04 0.75 → 1.38 s, q09b 0.15 → 0.63 s without the memo), so
-    * the memo stays. Same pattern and lifecycle as TopicQueries' model
-    * cache: keyed by applicationId so a restarted session in the same JVM
-    * never sees a stale entry (stopped apps evicted on sight), deliberately
-    * CROSS-query — released via [[evictAll]] when a session is done with
-    * the summary family, not at query boundaries. MEMORY_AND_DISK: the
-    * relation is one narrow row per doc (id + summary text), spillable at
-    * corpus scale.
+    * the memo stays (lifecycle in [[Memo]]). The relation is one narrow
+    * row per doc (id + summary text).
     */
-  private val summaryCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def summaryDf(spark: SparkSession, dir: String): DataFrame = {
-    summaryCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    summaryCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) =>
-        SummarizeOps.summarize(Tables.documents(spark, d),
-            SummarizeOps.chunkArray(col("text"), ChunkWords), TopK, " ", "")
-          .select("doc_id", "n_sentences", "summary")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-  }
-
-  /** Drop every memoized summary relation and release its storage. */
-  def evictAll(): Unit = {
-    val it = summaryCache.values.iterator()
-    while (it.hasNext) {
-      it.next().unpersist(blocking = false)
-      it.remove()
-    }
-  }
+  private val summaryDf = Memo.frame((spark, d) =>
+    SummarizeOps.summarize(Tables.documents(spark, d),
+        SummarizeOps.chunkArray(col("text"), ChunkWords), TopK, " ", "")
+      .select("doc_id", "n_sentences", "summary"))
 
   def q03Summary(spark: SparkSession, dir: String): DataFrame =
     summaryDf(spark, dir)

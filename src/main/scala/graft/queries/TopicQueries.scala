@@ -14,38 +14,17 @@ object TopicQueries {
 
   /** One LDA fit per (application, fixture dir): q40/q41 share the same
     * model (a fit is ~10s at sf0.1; harness mains run each query
-    * independently and would otherwise pay it twice). Keyed by
-    * applicationId, not dir alone: a Fitted holds DataFrames persisted in
-    * the creating session, so a restarted session in the same JVM
-    * (repeated test/driver runs) must not see a stale entry. Entries of
-    * stopped applications are evicted on sight.
+    * independently and would otherwise pay it twice). The fit persists its
+    * vectorized corpus itself; eviction releases it.
     */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), TopicPipeline.Fitted]()
-
-  private def fitted(spark: SparkSession, dir: String): TopicPipeline.Fitted = {
-    cache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    cache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      { case (_, d) => TopicPipeline.fit(Tables.documents(spark, d)) })
-  }
+  private val fitted = Memo[TopicPipeline.Fitted](
+    (spark, d) => TopicPipeline.fit(Tables.documents(spark, d)),
+    _.tokenized.unpersist(blocking = false))
 
   /** Topic → ranked terms (A5/T2). */
   def q40TopicTerms(spark: SparkSession, dir: String): DataFrame =
     TopicPipeline.topicTerms(fitted(spark, dir))
       .orderBy("topic", "term_rank")
-
-  /** Drop every memoized fit and release its persisted vectorized corpus.
-    * The cache is cross-query by design (q40/q41 share one ~10s LDA fit),
-    * so it is NOT released at query boundaries — a session that is done
-    * with topic modeling calls this.
-    */
-  def evictAll(): Unit = {
-    val it = cache.values.iterator()
-    while (it.hasNext) {
-      it.next().tokenized.unpersist(blocking = false)
-      it.remove()
-    }
-  }
 
   /** Per-doc dominant-topic tags (A6/T3/J4/T7). */
   def q41DocTags(spark: SparkSession, dir: String): DataFrame =

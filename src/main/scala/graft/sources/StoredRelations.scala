@@ -18,13 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one — reads the artifact back, a scan of a tiny (one row per
   * near-dup pair) relation instead of the corpus-wide build.
   *
-  * Unlike the in-memory session memos ([[graft.queries.SessionMemos]]),
-  * the artifact deliberately SURVIVES `evictAll()` — eviction models a
-  * cold *session*, and a cold session against a warehouse still has its
-  * stored indexes; what it loses is the in-memory block cache (readers
-  * re-scan parquet, which the cold bench pass then measures). The q79e/
-  * q104c stored ANN layouts made the opposite choice (path memo cleared
-  * on evict, layout re-written) because their content derives from
+  * Unlike the in-memory session memos ([[graft.queries.Memo]]), the
+  * artifact deliberately SURVIVES `SessionMemos.evictAll()` — eviction
+  * models a cold *session*, and a cold session against a warehouse still
+  * has its stored indexes; what it loses is the in-memory block cache
+  * (readers re-scan parquet, which the cold bench pass then measures). The
+  * q79e/q104c/q187d stored ANN layouts made the opposite choice (path memo
+  * evicted, layout re-written) because their content derives from
   * seeded in-memory KMeans models whose staleness the filesystem cannot
   * witness; a pair index derives from the input files alone, so here
   * staleness IS checkable, and is checked:

@@ -3,9 +3,9 @@ package graft
 /** Quality gate: no registered query may leak persisted RDDs past its
   * boundary. Runs EVERY SparkEntry query at sf0.001, releases the
   * query-scoped caches the way Verify/Bench do, evicts the (deliberately
-  * cross-query) memoized model caches, and asserts the session's
-  * persistent-RDD registry is empty — so a long-lived session running
-  * many queries holds storage only while a query is in flight.
+  * cross-query) session memos, and asserts the session's persistent-RDD
+  * registry and the memo registry are empty — so a long-lived session
+  * running many queries holds storage only while a query is in flight.
   */
 class CacheLifecycleSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -19,6 +19,10 @@ class CacheLifecycleSpec extends SparkSpec {
       assert(leaked.isEmpty,
         s"$name leaked ${leaked.size} persisted RDD(s): " +
           leaked.values.map(r => s"id=${r.id} ${r.name}").mkString(", "))
+      // driver-side memos (trained tables, collected rows, stored-layout
+      // paths) hold no RDD, so only the registry itself can show them
+      assert(queries.SessionMemos.entries == 0,
+        s"$name left ${queries.SessionMemos.entries} memo entries after evictAll")
     }
   }
 

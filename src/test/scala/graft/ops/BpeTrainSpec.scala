@@ -166,7 +166,7 @@ class BpeTrainSpec extends SparkSpec {
           .map(w => BpeMerges.encodeWordWith(ranks, w).length.toLong).sum
         r.getLong(0) -> n
       }.toMap
-    graft.queries.AnalysisQueries.evictAll()
+    graft.queries.SessionMemos.evictAll()
     assert(out.nonEmpty && out == want)
   }
 

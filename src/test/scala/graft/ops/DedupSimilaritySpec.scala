@@ -639,7 +639,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val b = graft.queries.SimilarityQueries.q79eStoredIvf(spark, dir)
       .collect().toSeq
     assert(b == a)
-    graft.queries.SimilarityQueries.evictAll()
+    graft.queries.SessionMemos.evictAll()
   }
 
   test("filtered IVF, float tier, all cells probed: bit-identical to the " +
@@ -743,7 +743,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val b = graft.queries.SimilarityQueries.q187dFilteredTopKIvf(spark, dir)
       .collect().toSeq
     assert(a.nonEmpty && a == b)
-    graft.queries.SimilarityQueries.evictAll()
+    graft.queries.SessionMemos.evictAll()
   }
 
   test("cosine near-dup pairs are symmetric-free and thresholded") {

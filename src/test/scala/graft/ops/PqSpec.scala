@@ -129,7 +129,7 @@ class PqSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"),
       plan.take(600))
-    graft.queries.SimilarityQueries.evictAll()
+    graft.queries.SessionMemos.evictAll()
   }
 
   test("PQ-ADC + rerank achieves >= 70% recall at the production overfetch") {

@@ -23,9 +23,17 @@ class PropertySpec extends SparkSpec {
     cs <- Gen.listOfN(len, Gen.alphaLowerChar)
   } yield cs.mkString
 
+  /** Stop words in lower, UPPER and Title case: the stop filter matches
+    * the lowered token, so the cased forms must drop too.
+    */
+  private val stopGen: Gen[String] = for {
+    w <- Gen.oneOf(TextOps.StopWords)
+    c <- Gen.oneOf(w, w.toUpperCase, w.capitalize)
+  } yield c
+
   private val textGen: Gen[String] = for {
     n <- Gen.choose(0, 30)
-    ws <- Gen.listOfN(n, Gen.oneOf(wordGen, Gen.oneOf(TextOps.StopWords)))
+    ws <- Gen.listOfN(n, Gen.oneOf(wordGen, stopGen))
     sep <- Gen.listOfN(math.max(n - 1, 0), Gen.oneOf(" ", "  ", " \t ", "\n"))
   } yield ws.zipAll(sep :+ "", "", "").map { case (w, s) => w + s }.mkString
 
@@ -113,6 +121,9 @@ class PropertySpec extends SparkSpec {
         .filter(w => w.length > 2 && !TextOps.StopWords.contains(w.toLowerCase))
       assert(g == expected.toSeq, s"text=<$t>")
     }
+    assert(texts.exists(_.split("\\s+").exists(w => w.length > 2 &&
+        w != w.toLowerCase && TextOps.StopWords.contains(w.toLowerCase))),
+      "degenerate sample: no cased stop word long enough to reach the stop check")
   }
 
   test("truncateAtWordBoundary: bounded by maxLength+3, mirrors Python rsplit") {

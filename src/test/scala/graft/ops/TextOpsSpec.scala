@@ -37,6 +37,17 @@ class TextOpsSpec extends SparkSpec {
     assert(one(TextOps.cleanTokens(lit("THE ab abc"))) == Seq("abc"))
   }
 
+  test("stop check is one hash-set lookup per token; null tokens drop") {
+    // over a Range, not a local Seq: ConvertToLocalRelation would evaluate
+    // the projection away before the plan could be inspected
+    val plan = spark.range(1)
+      .select(TextOps.cleanTokens(concat(lit("The cats "), col("id").cast("string"))))
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("INSET"), plan)
+    assert(one(TextOps.removeStopAndShort(
+      array(lit(null).cast("string"), lit("The"), lit("cats")))) == Seq("cats"))
+  }
+
   test("truncate at word boundary mirrors rsplit(' ', 1)[0] + '...'") {
     assert(one(TextOps.truncateAtWordBoundary(lit("aaaa bbbb cccc"), 12)) == "aaaa bbbb...")
     // head with no space is kept whole

@@ -45,7 +45,7 @@ class StoredPairsSpec extends SparkSpec {
     assert(asSet(stored) == asSet(fresh),
       "stored semantic_labels diverges from a fresh build — semantics " +
         "changed without a SemLabelsStoreVersion bump, or the store is corrupt")
-    graft.queries.SimilarityQueries.evictAll()
+    graft.queries.SessionMemos.evictAll()
     graft.CacheScope.releaseAll()
   }
 
