@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run throughput bench: one JSON line with per-query seconds,
   * also written to `target/bench.json` (stdout tail-capture once truncated
   * the line's head off a round artifact; the file copy is the durable one).
@@ -169,17 +168,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session timezone as Verify: date_format/window queries must
-      // evaluate identical values in both harnesses
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production registration path for the graft optimizer rules
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (codegen, shuffle machinery, parquet reader) so the
     // first measured query doesn't absorb one-time JVM/session init.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of registered queries —
   * `runMain graft.Explain <sfDir> [queryName...]` (all queries when none
   * given). Used to audit pushdown/pruning/broadcast/codegen decisions
@@ -16,14 +14,7 @@ object Explain {
     // same session shape as Verify/Bench (r15): the audited plans must
     // come from the session the harnesses actually run — the extension
     // rules and the parallelism both affect plan shape
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

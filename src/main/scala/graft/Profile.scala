@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r15 optimization round): phase-level timing probes for the
   * expensive bench rows — the "measure first" half of the optimization
   * loop (guide §1). Each probe is a hand-split copy of a registered
@@ -15,18 +13,12 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val probe = args.headOption.getOrElse("stream:q185_stream_click_attribution")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // attribution dial (dev only): decouple the shuffle-partition count
     // from the core count so anti-scaling readings can be split into
     // "more cores" vs "more tasks per stage"
-    val shuffleParts = sys.env.getOrElse("GRAFT_PROFILE_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    sys.env.get("GRAFT_PROFILE_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).limit(1).count()

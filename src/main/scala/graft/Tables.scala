@@ -25,6 +25,20 @@ object Tables {
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
 
+  /** The one session every graft harness and the test JVM runs on:
+    * `local[cpus]` with as many shuffle partitions, UTC (date_format and
+    * window queries must evaluate identical values in every harness), no
+    * UI, and [[graft.plans.GraftExtensions]] installed — the production
+    * registration path for the optimizer rule and the SQL functions.
+    */
+  def localSession(cpus: Int): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    .getOrCreate()
+
   def configure(spark: SparkSession): SparkSession = {
     SessionConf.foreach { case (k, v) => spark.conf.set(k, v) }
     spark

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -70,18 +69,7 @@ object Verify {
     val only = args.lift(2).map(_.split(',').toSeq)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production registration path for the graft optimizer rules
-      // (q64b's runtime extraOptimizations fallback covers sessions built
-      // without it; both present is safe — the rewritten shape is
-      // unmatchable, so the rule can never fire twice on one join)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // oracle map FIRST: it gates the entire downstream compare and needs

@@ -97,9 +97,4 @@ object CosineSim {
   /** Column-API entry point: `cosine_sim(a, b)`. */
   def cosineSim(a: Column, b: Column): Column =
     Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Register `cosine_sim` for SQL use in a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1270,6 +1270,9 @@ object SimilarityOps {
     */
   case class PqCodebook(codebook: DataFrame, m: Int, kSub: Int, dSub: Int)
 
+  /** Most vectors [[trainPq]] samples for its codebook fits. */
+  private val PqSampleCap = 16384
+
   /** Train a product quantizer (FAISS `ProductQuantizer`, public): the
     * embedding space is split into `m` contiguous subspaces of dim/m
     * dims each, and an independent KMeans codebook of `kSub` centroids is
@@ -1281,11 +1284,11 @@ object SimilarityOps {
     * compression that makes billion-vector indexes fit in RAM.
     *
     * Training runs m seeded Lloyd's fits over a BOUNDED deterministic
-    * sample (`sampleCap` vectors in xxhash64(vec_id) order) collected to
+    * sample (`PqSampleCap` vectors in xxhash64(vec_id) order) collected to
     * the driver — the published PQ practice (FAISS trains codebooks on a
     * bounded sample however large the index) and the same
     * bounded-collect-plus-driver-CPU contract as
-    * [[graft.ops.BpeTrainOps]]: the sample is `sampleCap × dim` doubles
+    * [[graft.ops.BpeTrainOps]]: the sample is `PqSampleCap × dim` doubles
     * at ANY corpus size, and m × kSub × dSub × iters driver flops replace
     * m sequential MLlib fits' worth of tiny cluster jobs (measured: the
     * distributed-fit version cost 17.8 s cold on the sf0.1 fixture —
@@ -1295,8 +1298,7 @@ object SimilarityOps {
     * lowest index, so given the seeds the whole codebook is
     * bit-reproducible across JVMs (unit-gated in PqSpec).
     */
-  def trainPq(embeddings: DataFrame, m: Int, kSub: Int,
-              sampleCap: Int = 16384): PqCodebook = {
+  def trainPq(embeddings: DataFrame, m: Int, kSub: Int): PqCodebook = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val p = prepared(embeddings)
@@ -1308,7 +1310,7 @@ object SimilarityOps {
     // and unbiased w.r.t. id assignment order
     val sample: Array[Array[Double]] = p
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleCap)
+      .limit(PqSampleCap)
       .select(col("emb")).collect().map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "cannot train a PQ codebook on an empty corpus")
     val rows = (0 until m).flatMap { s =>

@@ -139,8 +139,10 @@ object TextAnalysisOps {
     val nToks = size(tokens).cast("long")
     val nDistinct = size(array_distinct(tokens)).cast("long")
     val sumLen = aggregate(tokens, lit(0L), (a, t) => a + length(t))
+    // OptimizeIn turns the 127-word `isin` into one hash InSet lookup per
+    // token; a null token yields null and is not counted
     val nStop = size(filter(tokens, t =>
-      array_contains(typedlit(TextOps.StopWords), lower(t)))).cast("long")
+      lower(t).isin(TextOps.StopWords: _*))).cast("long")
     val nNonAlnum = (length(text) -
       length(regexp_replace(text, "[^a-zA-Z0-9 ]", ""))).cast("long")
     Seq(

@@ -670,20 +670,18 @@ object EventQueries {
     GROUP BY a.anchor_id ORDER BY a.anchor_id"""
 
   // --- q64b: the SAME computation through the optimizer-rule path --------
-  // The body writes the NAIVE non-equi join; graft.plans.RangeJoinRewrite
-  // (enabled here, idempotently, for the session) rewrites it to the
-  // bucketed equi-join at optimize time. Sharing q64's oracle puts the
-  // Catalyst extension itself under the driver's hash gate: a green row
-  // means the rule-rewritten plan is bit-identical to DuckDB's answer.
-  // The rule registration is session-global but the ACTIVATION is scoped
-  // to this one join via a WidthTag on its logical Join node — no session
-  // conf is mutated, so no other query in a shared Verify/Bench session
-  // can inherit the rewrite or its bucket width.
+  // The body writes the NAIVE non-equi join; graft.plans.RangeJoinRewrite,
+  // injected by the GraftExtensions the session is built with
+  // (Tables.localSession), rewrites it to the bucketed equi-join at
+  // optimize time. Sharing q64's oracle puts the Catalyst extension itself
+  // under the driver's hash gate: a green row means the rule-rewritten plan
+  // is bit-identical to DuckDB's answer. In a session without the extension
+  // the join runs as the naive nested loop, with the same rows. The
+  // ACTIVATION is scoped to this one join via a WidthTag on its logical
+  // Join node — no session conf is mutated, so no other query in a shared
+  // Verify/Bench session can inherit the rewrite or its bucket width.
   def q64bRangeJoinRule(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.RangeJoinRewrite
-    if (!spark.experimental.extraOptimizations.contains(RangeJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinRewrite
     rangeJoinSummary(spark, dir) { (probe, anchors) =>
       val joined = probe.join(anchors,
         col("ts") >= col("w_start") && col("ts") < col("w_end"))

@@ -346,13 +346,6 @@ object DocumentSources {
       .orderBy("partition")
   }
 
-  /** P13: the reference's timestamped export name
-    * (`datetime.now().strftime('%Y%m%d_%H%M%S')`, nlp_data_tagging.py:533)
-    * as a column expression.
-    */
-  def exportStamp(): Column =
-    date_format(current_timestamp(), "yyyyMMdd_HHmmss")
-
   /** §2.9 wordcloud feed: the whole corpus' summaries as one string
     * (`' '.join(summaries)`, nlp_data_tagging.py:334) — the only
     * presentation-layer aggregate the engine owns. collect_list's intra-

@@ -150,16 +150,6 @@ object StoredRelations {
       java.nio.file.Files.readString(marker) == fp
   }
 
-  /** Drop every stored artifact (test isolation; NOT part of session
-    * memo eviction — see class doc).
-    */
-  def dropAll(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(graft.Scratch.dir("stored")))
-  }
-
   /** Garbage-collect the artifact store: the janitor a long-lived
     * deployment schedules beside the maintenance jobs. Drops exactly the
     * dirs that can never again be read as valid —

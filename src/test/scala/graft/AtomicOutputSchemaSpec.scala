@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-
 /** Output contract for ORACLED queries: atomic columns only.
   *
   * The driver's correctness harness loads both the Spark result and the
@@ -18,20 +16,10 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   * counts their rows, and nested output is legitimate library surface
   * (e.g. blocklistFilter's ARRAY audit column).
   *
-  * Schema inspection is analysis-only (no job runs), so this stays cheap
-  * even though it touches every oracled query; construction-time eager
-  * work (memo builds) is released like Verify/Bench do.
+  * The schemas come from [[RegistrySweep]], which builds every query once
+  * for this spec and CacheLifecycleSpec together.
   */
 class AtomicOutputSchemaSpec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
-  private def nestedFields(schema: StructType): Seq[String] =
-    schema.fields.collect {
-      case f if f.dataType.isInstanceOf[ArrayType] ||
-        f.dataType.isInstanceOf[MapType] ||
-        f.dataType.isInstanceOf[StructType] =>
-        s"${f.name}: ${f.dataType.simpleString}"
-    }.toSeq
 
   test("every oracled query key has a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -40,14 +28,12 @@ class AtomicOutputSchemaSpec extends SparkSpec {
 
   test("every oracled query emits atomic columns only") {
     val oracled = SparkEntry.oracleSql.keySet
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => oracled(name) }
-      .flatMap { case (name, fn) =>
-        val bad = nestedFields(fn(spark, dir).schema)
-        if (bad.nonEmpty) Some(s"$name -> ${bad.mkString(", ")}") else None
+    val offenders = RegistrySweep.records
+      .filter(r => oracled(r.name))
+      .flatMap { r =>
+        val bad = r.nested.get
+        if (bad.nonEmpty) Some(s"${r.name} -> ${bad.mkString(", ")}") else None
       }
-    CacheScope.releaseAll()
-    queries.SessionMemos.evictAll()
     assert(offenders.isEmpty,
       "oracled queries must emit atomic columns only (the driver's pandas " +
         "compare sorts every column; array cells are unhashable there):\n" +

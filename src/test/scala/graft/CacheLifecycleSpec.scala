@@ -1,28 +1,25 @@
 package graft
 
 /** Quality gate: no registered query may leak persisted RDDs past its
-  * boundary. Runs EVERY SparkEntry query at sf0.001, releases the
-  * query-scoped caches the way Verify/Bench do, evicts the (deliberately
-  * cross-query) session memos, and asserts the session's persistent-RDD
-  * registry and the memo registry are empty — so a long-lived session
-  * running many queries holds storage only while a query is in flight.
+  * boundary. Reads [[RegistrySweep]], which runs EVERY SparkEntry query at
+  * sf0.001, releases the query-scoped caches the way Verify/Bench do and
+  * evicts the (deliberately cross-query) session memos; asserts the
+  * session's persistent-RDD registry and the memo registry were empty
+  * after each query — so a long-lived session running many queries holds
+  * storage only while a query is in flight.
   */
 class CacheLifecycleSpec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
 
   test("every registered query releases all persisted RDDs at its boundary") {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      CacheScope.releaseAll()
-      queries.SessionMemos.evictAll()
-      val leaked = spark.sparkContext.getPersistentRDDs
-      assert(leaked.isEmpty,
-        s"$name leaked ${leaked.size} persisted RDD(s): " +
-          leaked.values.map(r => s"id=${r.id} ${r.name}").mkString(", "))
+    RegistrySweep.records.foreach { r =>
+      r.run.get
+      assert(r.leaked.isEmpty,
+        s"${r.name} leaked ${r.leaked.size} persisted RDD(s): " +
+          r.leaked.mkString(", "))
       // driver-side memos (trained tables, collected rows, stored-layout
       // paths) hold no RDD, so only the registry itself can show them
-      assert(queries.SessionMemos.entries == 0,
-        s"$name left ${queries.SessionMemos.entries} memo entries after evictAll")
+      assert(r.memoEntries == 0,
+        s"${r.name} left ${r.memoEntries} memo entries after evictAll")
     }
   }
 

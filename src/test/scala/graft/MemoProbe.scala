@@ -9,12 +9,7 @@ import graft.ops.TextAnalysisOps
   */
 object MemoProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Tables.localSession(32)
     spark.sparkContext.setLogLevel("WARN")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     spark.range(1000000L).selectExpr("sum(id)").collect()

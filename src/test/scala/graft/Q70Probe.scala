@@ -9,7 +9,7 @@ import graft.ops.{TextAnalysisOps, TextOps}
   */
 object Q70Probe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]").config("spark.sql.shuffle.partitions", "32").config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false").config("spark.sql.extensions", "graft.plans.GraftExtensions").getOrCreate()
+    val spark = Tables.localSession(32)
     spark.sparkContext.setLogLevel("WARN")
     val dir = "/root/testdata/sf0.001"
     spark.range(1000000L).selectExpr("sum(id)").collect()

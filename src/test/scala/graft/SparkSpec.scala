@@ -3,18 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for test suites (one JVM-wide session). */
+/** Shared local SparkSession for test suites (one JVM-wide session): the
+  * harness session from [[Tables.localSession]], so every spec runs with
+  * the same extensions Verify and Bench install.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlImplicits = spark.implicits
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Tables.localSession(4)
 }

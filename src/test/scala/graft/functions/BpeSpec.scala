@@ -143,15 +143,10 @@ class BpeSpec extends SparkSpec {
 
   test("SQL registration works through GraftExtensions sessions") {
     import sqlImplicits._
-    // Verify/Bench sessions register bpe_encode via spark.sql.extensions;
-    // the shared test session may not, so register directly here
+    // bpe_encode comes from GraftExtensions, which the shared session installs
+    // through spark.sql.extensions exactly as Verify and Bench do
     Seq(Seq("stream", "batch")).toDF("pts")
       .createOrReplaceTempView("bpe_test")
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_encode"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BpeEncode].getName, "bpe_encode"),
-      exprs => BpeEncode(exprs.head))
     val got = spark.sql("SELECT bpe_encode(pts) AS t FROM bpe_test")
       .head().getSeq[String](0)
     assert(got == Seq("stream", "batch").flatMap(BpeMerges.encodeWord(_).toSeq))

@@ -51,7 +51,7 @@ class CosineSimSpec extends SparkSpec {
   }
 
   test("SQL registration works") {
-    CosineSim.register(spark)
+    // registered by GraftExtensions, which the shared session installs
     emb.limit(5).createOrReplaceTempView("cs_test")
     val n = spark.sql(
       "SELECT cosine_sim(emb, emb) AS c FROM cs_test WHERE cosine_sim(emb, emb) > 0.99")

@@ -63,15 +63,10 @@ class IntDotSpec extends SparkSpec {
   }
 
   test("SQL registration works through GraftExtensions sessions") {
-    // Verify/Bench sessions register int_dot via spark.sql.extensions;
-    // the shared test session may not, so register directly here
+    // int_dot comes from GraftExtensions, which the shared session installs
+    // through spark.sql.extensions exactly as Verify and Bench do
     Seq((Array(1, 2), Array(3, 4))).toDF("a", "b")
       .createOrReplaceTempView("id_test")
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("int_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[IntDot].getName, "int_dot"),
-      exprs => IntDot(exprs(0), exprs(1)))
     val got = spark.sql("SELECT int_dot(a, b) AS d FROM id_test")
       .head().getLong(0)
     assert(got == 11L)

@@ -57,15 +57,10 @@ class NfcNormalizeSpec extends SparkSpec {
   }
 
   test("SQL registration works through GraftExtensions sessions") {
-    // Verify/Bench sessions register nfc_normalize via spark.sql.extensions;
-    // the shared test session may not, so register directly here
+    // nfc_normalize comes from GraftExtensions, which the shared session
+    // installs through spark.sql.extensions exactly as Verify and Bench do
     Seq(Tuple1("cafe" + cp(0x0301))).toDF("s")
       .createOrReplaceTempView("nfc_test")
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[NfcNormalize].getName, "nfc_normalize"),
-      exprs => NfcNormalize(exprs.head))
     val got = spark.sql("SELECT nfc_normalize(s) AS n FROM nfc_test")
       .head().getString(0)
     assert(got == "caf" + cp(0xE9))

@@ -49,15 +49,10 @@ class PHashSpec extends SparkSpec {
   }
 
   test("SQL registration works through GraftExtensions sessions") {
-    // Verify/Bench sessions register phash64 via spark.sql.extensions;
-    // the shared test session may not, so register directly here
+    // phash64 comes from GraftExtensions, which the shared session installs
+    // through spark.sql.extensions exactly as Verify and Bench do
     Seq(Tuple1("the quick brown fox jumps over the lazy dog")).toDF("s")
       .createOrReplaceTempView("ph_test")
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("phash64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PHash64].getName, "phash64"),
-      exprs => PHash64(exprs.head))
     val got = spark.sql("SELECT phash64(encode(s, 'UTF-8')) AS h FROM ph_test")
       .head().getLong(0)
     assert(got == PHash.hash(

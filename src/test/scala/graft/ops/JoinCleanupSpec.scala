@@ -98,11 +98,10 @@ class JoinCleanupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val bucketed = keys(JoinOps.rangeJoinBucketed(
       probe, iv, "ts", "w_start", "w_end", widthSeconds = 300L))
-    // pin the rewrite rule OFF for the reference side (q64b registers it
-    // session-globally; a rewritten baseline would compare the operator
-    // against itself)
-    spark.experimental.extraOptimizations = spark.experimental
-      .extraOptimizations.filterNot(_ == graft.plans.RangeJoinRewrite)
+    // keep the reference side naive: the session's extension-injected
+    // rewrite rule is inert while its conf is unset and the join carries
+    // no WidthTag (a rewritten baseline would compare the operator against
+    // itself)
     spark.conf.unset(graft.plans.RangeJoinRewrite.BucketSecondsKey)
     val naive = keys(probe.join(iv,
       col("ts") >= col("w_start") && col("ts") < col("w_end")))

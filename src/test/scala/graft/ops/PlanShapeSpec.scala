@@ -108,8 +108,11 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q64b's naive join is rewritten by the rule before execution") {
-    // the query body registers RangeJoinRewrite itself; a nested-loop in
-    // its executed plan would mean the rule stopped firing
+    // the shared session injects RangeJoinRewrite through GraftExtensions,
+    // and with the session conf unset only q64b's WidthTag can activate
+    // it; a nested-loop in its executed plan would mean the rule stopped
+    // firing
+    spark.conf.unset(graft.plans.RangeJoinRewrite.BucketSecondsKey)
     assertNoQuadraticJoin("q64b",
       graft.queries.EventQueries.q64bRangeJoinRule(spark, dir))
   }

@@ -91,11 +91,10 @@ class PropertySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val bucketed = keys(JoinOps.rangeJoinBucketed(
       pDf, iDf, "ts", "w_start", "w_end", widthSeconds = 60L))
-    // pin the rewrite rule OFF for the reference side: q64b registers it
-    // session-globally, and a rewritten "naive" join would make this a
+    // keep the reference side naive: the session's extension-injected
+    // rewrite rule is inert while its conf is unset and the join carries
+    // no WidthTag, and a rewritten "naive" join would make this a
     // bucketed-vs-bucketed comparison
-    spark.experimental.extraOptimizations = spark.experimental
-      .extraOptimizations.filterNot(_ == graft.plans.RangeJoinRewrite)
     spark.conf.unset(graft.plans.RangeJoinRewrite.BucketSecondsKey)
     val naive = keys(pDf.join(iDf,
       col("ts") >= col("w_start") && col("ts") < col("w_end")))

@@ -133,6 +133,32 @@ class TextAnalysisSpec extends SparkSpec {
     assert(r.getAs[Double]("non_alnum_ratio") == 2.0 / 11)
   }
 
+  test("stopword count is one hash-set lookup per token; case folds, " +
+      "null tokens are not counted") {
+    // over a Range, not a local Seq: ConvertToLocalRelation would evaluate
+    // the projection away before the plan could be inspected
+    val plan = spark.range(1)
+      .select(concat(lit("The cats "), col("id").cast("string")).as("text"))
+      .select(col("text"), TextOps.tokenize(col("text")).as("toks"))
+      .select(TextAnalysisOps.qualityColumns(col("text"), col("toks")): _*)
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("INSET"), plan)
+    // UPPER, Title and lower stop words count; a null token and a
+    // non-stop word do not — the same count as the array_contains scan
+    val toks = array(lit("THE"), lit("Of"), lit(null).cast("string"),
+      lit("the"), lit("cats"))
+    val r = Seq(1L).toDF("doc_id")
+      .select(lit("THE Of the cats").as("text"), toks.as("toks"))
+      .select(
+        (TextAnalysisOps.qualityColumns(col("text"), col("toks")) :+
+          size(filter(col("toks"), t =>
+            array_contains(typedlit(TextOps.StopWords), lower(t)))).as("scan")
+        ): _*).head()
+    assert(r.getAs[Long]("n_tokens") == 5)
+    assert(r.getAs[Int]("scan") == 3)
+    assert(r.getAs[Double]("stopword_ratio") == 3.0 / 5)
+  }
+
   test("repetitionProfile computes Gopher char-fraction metrics exactly") {
     val df = Seq(
       (1L, "a b a b a b"),

@@ -30,24 +30,20 @@ class RangeJoinRewriteSpec extends SparkSpec {
     (probe, iv)
   }
 
-  // q64b's body registers the rule session-globally by design, and suites
-  // share the session — every test here pins BOTH knobs to the state it
-  // needs instead of assuming a clean slate.
+  // The shared session injects the rule through GraftExtensions, so it is
+  // always registered; it stays inert unless the session conf or a
+  // WidthTag on the join activates it. Suites share the session, so every
+  // test here sets the conf to the state it needs instead of assuming a
+  // clean slate.
   private def withoutRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RangeJoinRewrite)
     spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
     body
   }
 
   private def withRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
     spark.conf.set(RangeJoinRewrite.BucketSecondsKey, "300")
     try body
-    finally {
-      spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
-      spark.experimental.extraOptimizations = Nil
-    }
+    finally spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
   }
 
   test("naive interval join is rewritten to an equi-join, rows unchanged") {
@@ -103,21 +99,17 @@ class RangeJoinRewriteSpec extends SparkSpec {
   test("rule is inert when the conf is unset") {
     val (probe, iv) = fixtures
     spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
-    spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
-    try {
-      val plan = probe.join(iv,
-          col("ts") >= col("w_start") && col("ts") < col("w_end"))
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastNestedLoopJoin"))
-    } finally spark.experimental.extraOptimizations = Nil
+    val plan = probe.join(iv,
+        col("ts") >= col("w_start") && col("ts") < col("w_end"))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastNestedLoopJoin"))
   }
 
   test("malformed conf value disables the rule instead of failing the session") {
     val (probe, iv) = fixtures
-    spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
     spark.conf.set(RangeJoinRewrite.BucketSecondsKey, "five minutes")
     try {
-      // every query in the session runs the rule once registered — an
+      // every query in the session runs the injected rule — an
       // unrelated aggregate must not throw NumberFormatException
       assert(probe.groupBy().count().collect().head.getLong(0) == 5L)
       // and the matching join stays naive (rule treated as disabled)
@@ -125,44 +117,70 @@ class RangeJoinRewriteSpec extends SparkSpec {
           col("ts") >= col("w_start") && col("ts") < col("w_end"))
         .queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastNestedLoopJoin"))
-    } finally {
-      spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
-      spark.experimental.extraOptimizations = Nil
-    }
+    } finally spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
   }
 
   test("a WidthTag on the Join node scopes the rewrite to that join only") {
     val (probe, iv) = fixtures
-    spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
     spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
+    def cond = col("ts") >= col("w_start") && col("ts") < col("w_end")
+    val naiveRows = probe.join(iv, cond).collect().toSet
+    val tagged = probe.join(iv, cond)
+    tagged.queryExecution.analyzed.foreach {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        j.setTagValue(RangeJoinRewrite.WidthTag, 300L)
+      case _ => ()
+    }
+    val plan = tagged.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin"),
+      s"tag did not activate the rewrite:\n$plan")
+    assert(tagged.collect().toSet == naiveRows && naiveRows.nonEmpty)
+    // an identical UNtagged join in the same session stays naive
+    val untagged = probe.join(iv, cond)
+    assert(untagged.queryExecution.executedPlan.toString
+      .contains("BroadcastNestedLoopJoin"))
+  }
+
+  test("the shared session resolves every GraftExtensions SQL function") {
+    // the shared session comes from Tables.localSession, which names
+    // GraftExtensions in spark.sql.extensions as Verify and Bench do
+    val row = spark.sql(
+      """SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)),
+        |       poly_char_hash('ab'), content_key64('ab'),
+        |       int_dot(array(1, 2), array(3, 4)),
+        |       bpe_encode(array('ab')), phash64(encode('ab', 'UTF-8')),
+        |       nfc_normalize('ab'), strip_accents('ab')""".stripMargin).head()
+    assert(row.size == 8)
+    assert(row.getDouble(0) == 1.0)
+    assert(row.getLong(3) == 11L)
+    assert(row.getString(6) == "ab" && row.getString(7) == "ab")
+  }
+
+  test("setting the bucket conf on the shared session fires the " +
+      "extension-injected rule") {
+    val (probe, iv) = fixtures
+    // nothing registers the rule at runtime: the only copy is the one
+    // GraftExtensions injected when the session was built
+    assert(!spark.experimental.extraOptimizations.contains(RangeJoinRewrite))
+    spark.conf.set(RangeJoinRewrite.BucketSecondsKey, "300")
     try {
-      def cond = col("ts") >= col("w_start") && col("ts") < col("w_end")
-      val naiveRows = probe.join(iv, cond).collect().toSet
-      val tagged = probe.join(iv, cond)
-      tagged.queryExecution.analyzed.foreach {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
-          j.setTagValue(RangeJoinRewrite.WidthTag, 300L)
-        case _ => ()
-      }
-      val plan = tagged.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin"),
-        s"tag did not activate the rewrite:\n$plan")
-      assert(tagged.collect().toSet == naiveRows && naiveRows.nonEmpty)
-      // an identical UNtagged join in the same session stays naive
-      val untagged = probe.join(iv, cond)
-      assert(untagged.queryExecution.executedPlan.toString
-        .contains("BroadcastNestedLoopJoin"))
-    } finally spark.experimental.extraOptimizations = Nil
+      val joined = probe.join(iv,
+        col("ts") >= col("w_start") && col("ts") < col("w_end"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin") &&
+        !plan.contains("CartesianProduct"),
+        s"extension-injected rule did not fire:\n$plan")
+      assert(joined.count() == 5L)
+    } finally spark.conf.unset(RangeJoinRewrite.BucketSecondsKey)
   }
 
   test("GraftExtensions wires the rule into a session at build time") {
-    // the production registration path — the SAME class the conf string
-    // `spark.sql.extensions=graft.plans.GraftExtensions` names (Verify and
-    // Bench set that string and exercise the class-name resolution in a
-    // fresh JVM every round; `spark.sql.extensions` is a STATIC conf read
-    // from the SparkContext, so a second session over this suite's shared
-    // context can only attach it programmatically). A new session is
-    // built over the same SparkContext; extensions apply per-session.
+    // the production registration path, attached programmatically: the
+    // SAME class the conf string `spark.sql.extensions=
+    // graft.plans.GraftExtensions` names, which the shared session already
+    // carries (previous test). A new session is built over the same
+    // SparkContext; extensions apply per-session, and the rule found twice
+    // is safe — its rewritten shape is unmatchable.
     import org.apache.spark.sql.SparkSession
     val orig = spark
     SparkSession.clearActiveSession()
