@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.EventOps
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -507,9 +508,15 @@ object EventQueries {
   val sessionGapMicrosSql: String =
     "(300 + (user_id % 3) * 300) * 1000000"
 
-  def q117DynamicSessions(spark: SparkSession, dir: String): DataFrame =
-    graft.ops.EventOps.sessionsDynamicGap(
-      Tables.events(spark, dir), sessionGapMicros)
+  /** Row-level gap rule of the session STREAMS (q181/q191). Plain %, NOT
+    * floorMod: it must mirror sessionGapMicros / sessionGapMicrosSql
+    * bit-for-bit (they diverge on negative ids). */
+  private val streamGapMicrosOf: Long => Long =
+    uid => (300L + (uid % 3L) * 300L) * 1000000L
+
+  /** The output projection shared by q117 and its stream twins q181/q191. */
+  private def sessionRows(sessions: DataFrame): DataFrame =
+    sessions
       .select(col("user_id"), col("session_seq"), col("n_events"),
         date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
           .as("session_start"),
@@ -517,6 +524,10 @@ object EventQueries {
           .as("session_end"),
         col("duration_sec"))
       .orderBy("user_id", "session_seq")
+
+  def q117DynamicSessions(spark: SparkSession, dir: String): DataFrame =
+    sessionRows(graft.ops.EventOps.sessionsDynamicGap(
+      Tables.events(spark, dir), sessionGapMicros))
 
   // --- q181: the dynamic-gap session stream EXECUTED in the gate -----------
   // Third streaming path class driver-oracled (r13 verdict item 3): q179
@@ -529,19 +540,9 @@ object EventQueries {
   // equal the batch operator's hash-exactly once the final watermark
   // flush runs (the staged far-future flush event provides it).
   def q181StreamDynamicSessions(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingOps.dynamicSessionsViaStream(spark, dir,
-      chunks = 4,
-      // plain %, NOT floorMod: the gap rule must mirror sessionGapMicros
-      // / sessionGapMicrosSql bit-for-bit (they diverge on negative ids)
-      gapMicrosOf = uid => (300L + (uid % 3L) * 300L) * 1000000L,
-      scratchName = "q181_dyn_sessions")
-      .select(col("user_id"), col("session_seq"), col("n_events"),
-        date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_start"),
-        date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_end"),
-        col("duration_sec"))
-      .orderBy("user_id", "session_seq")
+    sessionRows(StreamingOps.dynamicSessionsViaStream(
+      spark, dir, chunks = 4, gapMicrosOf = streamGapMicrosOf,
+      scratchName = "q181_dyn_sessions"))
 
   // --- q191: checkpoint RESTART of the custom-state session stream ---------
   // q189 certifies checkpoint recovery for the BUILT-IN dedup operator's
@@ -555,17 +556,9 @@ object EventQueries {
   // from recovered state, double-emitted, or split at the stop boundary
   // breaks the hash.
   def q191StreamRestartSessions(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingOps.dynamicSessionsViaStreamRestart(spark, dir,
-      chunks = 4, stopAfterFiles = 2,
-      gapMicrosOf = uid => (300L + (uid % 3L) * 300L) * 1000000L,
-      scratchName = "q191_restart_sessions")
-      .select(col("user_id"), col("session_seq"), col("n_events"),
-        date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_start"),
-        date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_end"),
-        col("duration_sec"))
-      .orderBy("user_id", "session_seq")
+    sessionRows(StreamingOps.dynamicSessionsViaStreamRestart(
+      spark, dir, chunks = 4, stopAfterFiles = 2,
+      gapMicrosOf = streamGapMicrosOf, scratchName = "q191_restart_sessions"))
 
   // --- q185: the stream-stream interval join EXECUTED in the gate ----------
   // Fourth streaming path class driver-oracled (the r13 verdict's stretch
@@ -575,28 +568,29 @@ object EventQueries {
   // set is replay-chunking-independent, so the streamed rows must equal
   // the batch bucketed-range-join's hash-exactly.
   def q185StreamClickAttribution(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingOps.clickAttributionViaStream(spark, dir,
-      chunks = 4, windowSeconds = AttributionWindowSeconds,
-      scratchName = "q185_click_attr")
-      .select(col("click_id"), col("view_id"), col("user_id"),
-        col("delay_sec"))
-      .orderBy("click_id", "view_id")
+    attributionRows(StreamingOps.clickAttributionViaStream(
+      spark, dir, chunks = 4, windowSeconds = AttributionWindowSeconds,
+      scratchName = "q185_click_attr"))
 
   // --- q192: checkpoint RESTART of the stream-stream interval join ---------
   // Completes the restart matrix: q189 recovers the built-in dedup
   // operator's state, q191 custom flatMapGroupsWithState state, and this
   // the dual-side JOIN BUFFERS (unmatched views/clicks, one watermark
-  // per side). The replay stops after 2 of 5 files with both buffers
-  // non-empty; a new query resumes from the checkpoint, so every
-  // CROSS-CUT match — a view before the stop whose click arrives after —
-  // exists only if the recovered buffers are complete. q77's batch SQL
-  // verifies the two-start execution hash-exactly.
+  // per side). The replay is cut inside a known match window, so a new
+  // query resumes from the checkpoint with both buffers non-empty, and
+  // every CROSS-CUT match — a view before the stop whose click arrives
+  // after — exists only if the recovered buffers are complete. q77's
+  // batch SQL verifies the two-start execution hash-exactly.
   def q192StreamRestartAttribution(spark: SparkSession,
                                    dir: String): DataFrame =
-    graft.streaming.StreamingOps.clickAttributionViaStreamRestart(spark, dir,
-      chunks = 4, stopAfterFiles = 2,
+    attributionRows(StreamingOps.clickAttributionViaStreamRestart(
+      spark, dir, chunks = 4, stopAfterFiles = 2,
       windowSeconds = AttributionWindowSeconds,
-      scratchName = "q192_restart_attr")
+      scratchName = "q192_restart_attr"))
+
+  /** The output projection shared by the attribution streams q185/q192. */
+  private def attributionRows(matches: DataFrame): DataFrame =
+    matches
       .select(col("click_id"), col("view_id"), col("user_id"),
         col("delay_sec"))
       .orderBy("click_id", "view_id")

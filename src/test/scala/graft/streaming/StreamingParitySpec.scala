@@ -678,6 +678,60 @@ class StreamingParitySpec extends SparkSpec {
         s"${out.distinct.size} distinct")
   }
 
+  test("a stream restart keeps the caller's shuffle-partition conf while " +
+      "its state operators run on the pinned state-partition count") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before != "8", "the test needs a session dial unlike the state count")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-state-dial")
+    (0L until 200L).map(i => (i, s"text ${i % 37}")).toDF("doc_id", "text")
+      .write.parquet(s"$tmp/documents.parquet")
+    val scratchName = "stream_dedup/state-dial-test"
+    val confSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stateSeen =
+      new java.util.concurrent.ConcurrentLinkedQueue[(java.util.UUID, Int)]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val ours = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Unit]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.sink.description.contains(scratchName)) {
+          ours.put(e.progress.runId, ())
+          confSeen.add(spark.conf.get(key))
+          e.progress.stateOperators.foreach(op =>
+            stateSeen.add(e.progress.runId -> op.numShufflePartitions.toInt))
+        }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (ours.containsKey(e.runId)) ended.incrementAndGet()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = StreamingOps.exactDedupViaStreamRestart(spark,
+        s"$tmp/documents.parquet", chunks = 4, stopAfterFiles = 2,
+        scratchName = scratchName).collect().map(_.getLong(0)).toSeq
+      assert(out.distinct.size == 37 && out.size == 37)
+      // both starts' progress events precede their termination events on
+      // the listener bus
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert(ended.get() == 2)
+      }
+      val confs = confSeen.asScala.toSeq
+      assert(confs.nonEmpty && confs.forall(_ == before),
+        s"caller's $key read while the stream ran: $confs")
+      val states = stateSeen.asScala.toSeq
+      assert(states.map(_._1).distinct.size == 2,
+        s"state operator progress from both starts expected: $states")
+      assert(states.forall(_._2 == 8),
+        s"state operators off the pinned count: $states")
+      assert(spark.conf.get(key) == before)
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("q99 heavy-hitter stream: replayed corpus candidates cover every " +
       "exact heavy hitter (mergeable-summaries guarantee across batches)") {
     import graft.ops.TextOps
