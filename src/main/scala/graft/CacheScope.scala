@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Query-boundary lifecycle for operator-internal persists.
@@ -17,10 +17,11 @@ import org.apache.spark.storage.StorageLevel
   * results are materialized. Harness mains treat each registered query as
   * an independent program, so they release at every query boundary.
   *
-  * `localCheckpoint` RDDs (iterative loops truncating lineage) follow the
-  * same pattern via [[registerRdd]]: unpersisting a local checkpoint
-  * discards its only copy of the data, so the FINAL checkpoint of a loop
-  * must live until the query boundary, not the end of the loop.
+  * Iterative loops truncate their lineage with [[checkpoint]] each round
+  * (an eager `localCheckpoint`, registered the same way): unpersisting a
+  * local checkpoint discards its only copy of the data, so the FINAL
+  * round's checkpoint must live until the query boundary, while each
+  * superseded round is freed at once with [[dropCheckpoint]].
   *
   * Session memos ([[graft.queries.Memo]]: the LDA fit, the IVF index, the
   * shared shingle/summary relations) are deliberately NOT query-scoped —
@@ -51,30 +52,45 @@ object CacheScope {
     if (local != null) local.add(f) else { pending.add(f); () }
   }
 
-  /** Persist `ds` and schedule its unpersist for the next [[releaseAll]]. */
+  /** Persist `ds` and schedule its unpersist for the next [[releaseAll]]
+    * — unless the CacheManager already holds its plan. Such a plan is a
+    * longer-lived cache (a session memo such as DedupQueries' shingle
+    * relation) or an earlier persist of this query: unpersist matches
+    * plans, not Dataset objects, so registering it again would evict the
+    * memo at the next query boundary and every later consumer would
+    * silently re-derive the whole upstream chain.
+    */
   def persist[T](ds: Dataset[T],
-                 level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
-    ds.persist(level)
-    register(() => { ds.unpersist(blocking = false); () })
-    ds
+                 level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] =
+    if (ds.storageLevel != StorageLevel.NONE) ds
+    else {
+      ds.persist(level)
+      register(() => { ds.unpersist(blocking = false); () })
+      ds
+    }
+
+  /** One round of an iterative loop: an EAGER `localCheckpoint` of `ds`
+    * (one job, truncating the lineage), whose blocks are released at the
+    * next [[releaseAll]] — or earlier by [[dropCheckpoint]] once a later
+    * round supersedes it. Registering at creation also frees the last
+    * round when the loop throws (a failed convergence `require`).
+    */
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
+    val cp = ds.localCheckpoint(eager = true)
+    Bridge.checkpointRdd(cp).foreach { rdd =>
+      register(() => {
+        if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
+        ()
+      })
+    }
+    cp
   }
 
-  /** [[persist]], unless `ds` is already persisted — in which case it is a
-    * longer-lived cache (a session memo such as DedupQueries' shingle
-    * relation) that must NOT be drained at the next query boundary:
-    * registering it here would unpersist the memo out from under every
-    * later query that consumes it, silently re-deriving the whole upstream
-    * chain each time.
+  /** Free the blocks of a superseded [[checkpoint]] now: the next round
+    * is materialized, so they are garbage (a no-op for any other plan).
     */
-  def persistIfUnpersisted[T](ds: Dataset[T],
-                              level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] =
-    if (ds.storageLevel == StorageLevel.NONE) persist(ds, level) else ds
-
-  /** Schedule an already-persisted RDD (e.g. a local checkpoint backing a
-    * returned DataFrame) for release at the next [[releaseAll]].
-    */
-  def registerRdd(rdd: RDD[_]): Unit =
-    register(() => { rdd.unpersist(blocking = false); () })
+  def dropCheckpoint(ds: Dataset[_]): Unit =
+    Bridge.checkpointRdd(ds).foreach(_.unpersist(blocking = false))
 
   /** Run `body` with a PRIVATE registration scope and release exactly the
     * persists it registered (on the current thread) when it returns.

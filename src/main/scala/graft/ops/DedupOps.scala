@@ -263,7 +263,7 @@ object DedupOps {
   def boilerplateProfile(sh: DataFrame, minDocs: Long,
                          idCol: String = "doc_id"): DataFrame = {
     // two consumers: the df aggregate and the back-join
-    val cached = graft.CacheScope.persistIfUnpersisted(sh)
+    val cached = graft.CacheScope.persist(sh)
     val bp = cached.groupBy(col("source"), col("shingle"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") >= minDocs)
@@ -296,7 +296,7 @@ object DedupOps {
     // index. When the caller hands us an ALREADY-persisted frame (the
     // memoized session shingle cache), reuse it as-is — query-boundary
     // registration would evict the memo.
-    val cached = graft.CacheScope.persistIfUnpersisted(sh)
+    val cached = graft.CacheScope.persist(sh)
     val sizes = cached.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     val common = cached.toDF(idCol, "shingle")
       .join(cached.toDF("id_b", "shingle"), "shingle")
@@ -423,8 +423,8 @@ object DedupOps {
     // already-persisted side (the STORED index under a streaming caller
     // checking batch after batch against it) is reused, not re-registered
     // at query scope
-    val ns = graft.CacheScope.persistIfUnpersisted(newSigs)
-    val is_ = graft.CacheScope.persistIfUnpersisted(indexSigs)
+    val ns = graft.CacheScope.persist(newSigs)
+    val is_ = graft.CacheScope.persist(indexSigs)
     val nb = lshBands(ns, rowsPerBand, idCol).toDF("new_id", "band", "key")
     val ob = lshBands(is_, rowsPerBand, idCol).toDF("old_id", "band", "key")
     val cand = nb.join(ob, Seq("band", "key"))
@@ -547,11 +547,8 @@ object DedupOps {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    import org.apache.spark.sql.graftbridge.Bridge
-    def releaseCheckpoint(ds: DataFrame): Unit =
-      Bridge.checkpointRdd(ds).foreach(_.unpersist(blocking = false))
-    var labels = docs.select(col(idCol), col(idCol).as("cluster_id"))
-      .localCheckpoint(true)
+    var labels = graft.CacheScope.checkpoint(
+      docs.select(col(idCol), col(idCol).as("cluster_id")))
     var iter = 0
     var changed = 1L
     while (iter < maxIters && changed > 0) {
@@ -564,18 +561,18 @@ object DedupOps {
       // checkpoint just cached — no join, no shuffle, no recompute. The
       // previous formulation paid a second full action per round (a
       // next-vs-labels join) on top of the checkpoint materialization.
-      val next = labels.join(nbrMin, Seq(idCol), "left")
-        .select(col(idCol),
-          least(col("cluster_id"), coalesce(col("nbr_lab"), col("cluster_id")))
-            .as("cluster_id"),
-          (coalesce(col("nbr_lab"), col("cluster_id")) < col("cluster_id"))
-            .as("chg"))
-        .localCheckpoint(true)
+      val next = graft.CacheScope.checkpoint(
+        labels.join(nbrMin, Seq(idCol), "left")
+          .select(col(idCol),
+            least(col("cluster_id"), coalesce(col("nbr_lab"), col("cluster_id")))
+              .as("cluster_id"),
+            (coalesce(col("nbr_lab"), col("cluster_id")) < col("cluster_id"))
+              .as("chg")))
       changed = next.where(col("chg")).count()
       // the superseded round's checkpoint blocks are garbage the moment
       // `next` is materialized — free them instead of leaking one cached
       // RDD per round
-      releaseCheckpoint(labels)
+      graft.CacheScope.dropCheckpoint(labels)
       labels = next.select(col(idCol), col("cluster_id"))
       iter += 1
     }
@@ -590,7 +587,6 @@ object DedupOps {
         s"($changed labels still changing) — raise maxIters")
     // the FINAL checkpoint is the returned frame's only copy of the data —
     // it lives until the consumer's query boundary, not the end of this loop
-    Bridge.checkpointRdd(labels).foreach(graft.CacheScope.registerRdd)
     labels
   }
 
@@ -626,9 +622,6 @@ object DedupOps {
   def duplicateClustersStar(docs: DataFrame, pairs: DataFrame,
                             maxRounds: Int = 25,
                             idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    def releaseCheckpoint(ds: DataFrame): Unit =
-      Bridge.checkpointRdd(ds).foreach(_.unpersist(blocking = false))
     // (count, xor-of-hashes): order-independent, overflow-free (an ANSI
     // sum of 2^63-scale hashes would trip ARITHMETIC_OVERFLOW)
     def fingerprint(e: DataFrame): (Long, Long) = {
@@ -636,11 +629,10 @@ object DedupOps {
         coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    var edges = pairs
+    var edges = graft.CacheScope.checkpoint(pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
-      .where(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
+      .where(col("u") =!= col("v")).distinct())
     var prev = fingerprint(edges)
     var stable = prev._1 == 0L
     var round = 0
@@ -657,25 +649,20 @@ object DedupOps {
       // small-star on the directed result: all of u's (smaller) neighbors
       // and u itself attach to the minimum; (m, m) self-loops drop out
       val smins = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(smins, "u")
+      val small = graft.CacheScope.checkpoint(large.join(smins, "u")
         .select(explode(array(
           struct(col("u"), col("m").as("v")),
           struct(col("v").as("u"), col("m").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .where(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       val cur = fingerprint(small)
-      releaseCheckpoint(edges)
+      graft.CacheScope.dropCheckpoint(edges)
       edges = small
       stable = cur == prev
       prev = cur
       round += 1
     }
-    // register the final checkpoint BEFORE the convergence require: on the
-    // throw path the query-boundary releaseAll still frees it (it backs no
-    // returned frame in that case, so early release is safe)
-    Bridge.checkpointRdd(edges).foreach(graft.CacheScope.registerRdd)
     require(stable,
       s"duplicateClustersStar did not converge in $maxRounds rounds")
     // At the fixpoint each non-root node carries exactly one edge, to its

@@ -1855,16 +1855,13 @@ object SimilarityOps {
     // plan (window over join over union over window ...) deepens until
     // optimization time dominates (measured: round 3 cost 15 s against
     // 1.7 s of actual work at sf0.1); superseded rounds' blocks are
-    // freed immediately and the final checkpoint is registered for
-    // query-boundary release.
-    import org.apache.spark.sql.graftbridge.Bridge
-    def releaseCheckpoint(ds: DataFrame): Unit =
-      Bridge.checkpointRdd(ds).foreach(_.unpersist(blocking = false))
+    // freed immediately and the final checkpoint lives until the query
+    // boundary ([[graft.CacheScope.checkpoint]]).
     // init: every vector is a query (everyNth = 1) over a deliberately
     // cheap LSH config — rounds do the quality work, that is the point
-    var cur = bucketedTopK(embeddings, 1, k, bits, tables)
-      .select("query_id", "cand_id", "cos_micro", "rk")
-      .localCheckpoint(true)
+    var cur = graft.CacheScope.checkpoint(
+      bucketedTopK(embeddings, 1, k, bits, tables)
+        .select("query_id", "cand_id", "cos_micro", "rk"))
     var r = 0
     while (r < rounds) {
       import org.apache.spark.sql.expressions.Window
@@ -1880,13 +1877,12 @@ object SimilarityOps {
         .join(u.toDF("m", "cand_id"), Seq("m"))
         .where(col("query_id") =!= col("cand_id"))
         .select("query_id", "cand_id")
-      val next = rerank(edges.unionByName(props).distinct())
-        .localCheckpoint(true)
-      releaseCheckpoint(cur)
+      val next = graft.CacheScope.checkpoint(
+        rerank(edges.unionByName(props).distinct()))
+      graft.CacheScope.dropCheckpoint(cur)
       cur = next
       r += 1
     }
-    Bridge.checkpointRdd(cur).foreach(graft.CacheScope.registerRdd)
     cur
   }
 
@@ -1912,9 +1908,6 @@ object SimilarityOps {
   def graphSearchTopK(embeddings: DataFrame, graph: DataFrame,
                       everyNth: Int, k: Int, beam: Int,
                       hops: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    def releaseCheckpoint(ds: DataFrame): Unit =
-      Bridge.checkpointRdd(ds).foreach(_.unpersist(blocking = false))
     val p = graft.CacheScope.persist(prepared(embeddings))
     val q = graft.CacheScope.persist(
       p.where(col("vec_id") % everyNth === 0).toDF("query_id", "q_emb"))
@@ -1930,10 +1923,9 @@ object SimilarityOps {
         width)
     val entries = p.select(col("vec_id").as("cand_id"))
       .orderBy("cand_id").limit(beam)
-    var frontier = scoreKeep(
+    var frontier = graft.CacheScope.checkpoint(scoreKeep(
       q.select(col("query_id")).crossJoin(broadcast(entries))
-        .where(col("cand_id") =!= col("query_id")), beam)
-      .localCheckpoint(true)
+        .where(col("cand_id") =!= col("query_id")), beam))
     var h = 0
     while (h < hops) {
       val exp = frontier.select(col("query_id"), col("cand_id").as("node"))
@@ -1942,12 +1934,11 @@ object SimilarityOps {
         .where(col("cand_id") =!= col("query_id"))
       val cands = frontier.select("query_id", "cand_id")
         .unionByName(exp).distinct()
-      val next = scoreKeep(cands, beam).localCheckpoint(true)
-      releaseCheckpoint(frontier)
+      val next = graft.CacheScope.checkpoint(scoreKeep(cands, beam))
+      graft.CacheScope.dropCheckpoint(frontier)
       frontier = next
       h += 1
     }
-    Bridge.checkpointRdd(frontier).foreach(graft.CacheScope.registerRdd)
     frontier.where(col("rk") <= k)
   }
 

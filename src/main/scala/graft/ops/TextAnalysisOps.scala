@@ -15,6 +15,11 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysisOps {
 
+  /** Bit length of a positive integer, ⌊log2 c⌋ + 1, as the length of its
+    * binary string (the q70 trick): integer-exact, no libm.
+    */
+  private def log2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
+
   /** Per-language marker-word profiles for the n-gram/stopword language-ID
     * heuristic. Small public stop-word samples; the heuristic is
     * argmax(profile-hit count), ties broken by language code order.
@@ -386,7 +391,6 @@ object TextAnalysisOps {
     // two consumers: the df aggregate and the scoring join
     val postings = graft.CacheScope.persist(postings0)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    def log2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
     val weights = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
@@ -443,7 +447,6 @@ object TextAnalysisOps {
       .groupBy(col(idCol), col("dl"), col("term")).agg(count(lit(1)).as("tf")))
     val corpus = staged.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).as("l_total"))
-    def log2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
     val weights = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(corpus))
@@ -513,7 +516,6 @@ object TextAnalysisOps {
                                idfBoost: Int, dfCap: Long,
                                idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def log2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
     val weights = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") <= dfCap)
@@ -708,12 +710,11 @@ object TextAnalysisOps {
       sum(col("n_good")).as("tg"), sum(col("n_bad")).as("tb")))
     // floor(log2 x) = length(binary string) - 1; the four -1s cancel in
     // the two differences, so raw lengths are exact here
-    def l2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
     counts.crossJoin(totals)
       .select(col("bucket"), col("n_good"), col("n_bad"),
-        (l2len(col("n_good") + 1L) - l2len(col("n_bad") + 1L)
-          - l2len(col("tg") + lit(buckets))
-          + l2len(col("tb") + lit(buckets))).as("weight"))
+        (log2len(col("n_good") + 1L) - log2len(col("n_bad") + 1L)
+          - log2len(col("tg") + lit(buckets))
+          + log2len(col("tb") + lit(buckets))).as("weight"))
   }
 
   /** Train-vs-HELD-OUT evaluation of the NB trainer in one dataflow row —
@@ -1426,9 +1427,9 @@ object TextAnalysisOps {
     val ranked = freq.withColumn("rank",
       row_number().over(
         Window.partitionBy("source").orderBy(col("freq").desc, col("tok"))))
-    def log2len(c: Column): Column = (length(conv(c, 10, 2)) - 1).cast("long")
+    def floorLog2(c: Column): Column = log2len(c) - 1L
     val pts = ranked.select(col("source"),
-      log2len(col("rank")).as("x"), log2len(col("freq")).as("y"))
+      floorLog2(col("rank")).as("x"), floorLog2(col("freq")).as("y"))
     pts.groupBy("source")
       .agg(count(lit(1)).as("n_terms"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -1627,7 +1628,6 @@ object TextAnalysisOps {
     val model = db.groupBy(col("b")).agg(
       sum(col("c")).as("p_raw"),
       sum(when(col("is_t"), col("c")).otherwise(0L)).as("q_raw"))
-    def log2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
     val scored = db.join(broadcast(model), Seq("b"))
       .select(col(idCol), col("c"),
         (log2len(col("q_raw") + 1) - log2len(col("p_raw") + 1)).as("s"))
@@ -1691,7 +1691,6 @@ object TextAnalysisOps {
     val bt = graft.CacheScope.persist(
       dt.groupBy(col("w1"), col("w2")).agg(sum(col("k")).as("btf")))
     val ut = bt.groupBy(col("w1")).agg(sum(col("btf")).as("ctf1"))
-    def log2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
     // Model-side join first: bt ⋈ ut is VOCABULARY-sized on both sides
     // (per-w1 fan-out bounded by distinct right-neighbors), so enriching
     // the bigram table with its left-context mass costs one small join.
@@ -1788,7 +1787,6 @@ object TextAnalysisOps {
                                idCol: String = "doc_id"): DataFrame = {
     val ut = model.select(col("w1"), col("ctf1")).distinct()
     val total = ut.agg(sum(col("ctf1")).as("b_total"))
-    def log2len(c: Column): Column = length(conv(c, 10, 2)).cast("long")
     // Join shape (the q90 lesson applied to the smoothing ladder): the
     // model arrives pre-enriched (model-sized), so the corpus-sized `dt`
     // shuffles ONCE on (w1, w2). Rows that miss the enriched model — the

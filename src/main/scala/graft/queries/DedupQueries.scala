@@ -570,7 +570,7 @@ object DedupQueries {
     // labels live as a StoredRelations artifact (the query's own premise
     // — incremental maintenance reads yesterday's table from storage,
     // it never re-derives it), versioned on the carve + pairs semantics
-    val baseLabels = graft.CacheScope.persistIfUnpersisted(
+    val baseLabels = graft.CacheScope.persist(
       graft.sources.StoredRelations.readOrBuild(spark, "dedup_labels_baseA",
         Seq(s"$dir/documents.parquet"),
         s"1:carve=inA,pairs=$JpairsStoreVersion")(
@@ -629,7 +629,7 @@ object DedupQueries {
       size(array_distinct(col("toks"))).cast("long").as("n_distinct_tokens"))
     // yesterday's canonical table: a stored artifact over the base carve,
     // derived by the SAME election the batch tier uses
-    val baseCanonical = graft.CacheScope.persistIfUnpersisted(
+    val baseCanonical = graft.CacheScope.persist(
       graft.sources.StoredRelations.readOrBuild(spark, "dedup_canonical_baseA",
         Seq(s"$dir/documents.parquet"), CanonicalStoreVersion) {
         val baseDocs = toked.select(col("doc_id")).where(snaps.inA)
@@ -1658,28 +1658,22 @@ object DedupQueries {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // the q55 checkpoint lifecycle: eager localCheckpoint truncates the
     // iterated lineage, each superseded round's blocks are freed
-    // immediately, and the FINAL round's checkpoint is registered with
-    // CacheScope so the query boundary releases it (CacheLifecycleSpec's
-    // no-surviving-persist gate)
-    import org.apache.spark.sql.graftbridge.Bridge
-    def releaseCheckpoint(ds: DataFrame): Unit =
-      Bridge.checkpointRdd(ds).foreach(_.unpersist(blocking = false))
-    var rank = nodes.withColumn("r", lit(1000000L)).localCheckpoint(true)
+    // immediately, and the FINAL round's checkpoint is released at the
+    // query boundary (CacheLifecycleSpec's no-surviving-persist gate)
+    var rank = graft.CacheScope.checkpoint(nodes.withColumn("r", lit(1000000L)))
     for (_ <- 1 to PageRankIters) {
       val contrib = edges
         .join(rank.withColumnRenamed("doc_id", "src"), "src")
         .join(deg, "src")
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      val next = nodes
+      val next = graft.CacheScope.checkpoint(nodes
         .join(contrib.withColumnRenamed("dst", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"),
-          expr("150000 + (85 * coalesce(m, 0)) div 100").as("r"))
-        .localCheckpoint(true)
-      releaseCheckpoint(rank)
+          expr("150000 + (85 * coalesce(m, 0)) div 100").as("r")))
+      graft.CacheScope.dropCheckpoint(rank)
       rank = next
     }
-    Bridge.checkpointRdd(rank).foreach(graft.CacheScope.registerRdd)
     rank
       .join(deg.withColumnRenamed("src", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), col("r").as("rank_micro"),

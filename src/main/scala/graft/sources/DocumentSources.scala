@@ -149,18 +149,18 @@ object DocumentSources {
     *     (left-anti on upsert ∪ delete keys) ∪ the upserts — latest-wins
     *     by construction;
     *  3. the merge is written to a STAGING tree first, then swapped in
-    *     per bucket through a RECOVERABLE three-step (park the live dir
-    *     in a sibling `-old` tree, rename the staged dir in, drop the
-    *     parked dir). Never read-while-overwrite — the self-overwrite
-    *     hazard a direct dynamic overwrite of the tree being scanned
-    *     would race — and a bucket emptied by deletes simply has no
-    *     staged dir, so the swap removes it (no stale files). A crash
-    *     anywhere inside the swap leaves either the parked dir with no
-    *     live twin (restored by the NEXT call's recovery sweep before it
-    *     reads the base — the base is intact, the replay re-merges) or
-    *     both dirs (the swap completed — the leftover is dropped), so a
-    *     replayed batch converges instead of losing the bucket's
-    *     non-delta rows.
+    *     per bucket through [[StoreSwap.swapDirs]]' RECOVERABLE
+    *     three-step (park the live dir in a sibling `-old` tree, rename
+    *     the staged dir in, drop the parked dir). Never
+    *     read-while-overwrite — the self-overwrite hazard a direct
+    *     dynamic overwrite of the tree being scanned would race — and a
+    *     bucket emptied by deletes simply has no staged dir, so the swap
+    *     removes it (no stale files). A crash anywhere inside the swap
+    *     leaves either the parked dir with no live twin (restored by the
+    *     NEXT call's recovery sweep before it reads the base — the base
+    *     is intact, the replay re-merges) or both dirs (the swap
+    *     completed — the leftover is dropped), so a replayed batch
+    *     converges instead of losing the bucket's non-delta rows.
     *
     * At 100 TB this is the operational shape: a day's delta rewrites
     * O(affected buckets) of data while every untouched bucket's files
@@ -187,29 +187,15 @@ object DocumentSources {
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
     if (affected.isEmpty) return Nil
     val hRoot = new org.apache.hadoop.fs.Path(path)
-    val rootFs = hRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldRoot = new org.apache.hadoop.fs.Path(s"$path-old")
-    // Hadoop FileSystem.rename/delete signal failure by RETURNING FALSE,
-    // not throwing. A silently failed park would let the next rename nest
-    // the staged dir INSIDE the still-live one — duplicate rows, a
-    // corruption mode the crash-safe swap exists to prevent — so every
-    // step checks its boolean and aborts the batch on failure (the
-    // recovery sweep at the next call then restores the parked state).
-    def mustFs(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"mergeUpsertBuckets: filesystem step failed (returned false): $what")
-    // recovery sweep: a bucket dir parked in the -old tree with no live
-    // twin means a previous swap crashed between park and rename-in —
-    // restore it so the base scan below sees the pre-merge content; with
-    // a live twin the swap completed and the leftover is dropped. Shared
-    // with the DV entry points (recoverBucketSwap) so every bucket-swap
-    // writer heals the same way.
-    recoverBucketSwap(rootFs, path, "mergeUpsertBuckets")
+    val fs = hRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // recovery sweep before the base read: a bucket parked by a crashed
+    // swap is restored, so the base scan below sees the pre-merge content
+    StoreSwap.recoverDirs(fs, path, "mergeUpsertBuckets")
     // tombstone-last: a key both upserted and deleted in one delta dies
     // on every path (the bootstrap anti-join below is the same rule)
     val upLive = up.join(deleteKeys.select(col("doc_id")), Seq("doc_id"),
       "left_anti")
-    if (!rootFs.exists(hRoot)) {
+    if (!fs.exists(hRoot)) {
       // bootstrap: no tree yet — the delta IS the initial content
       upLive.write.mode("overwrite").partitionBy("bucket").parquet(path)
       return affected
@@ -219,24 +205,10 @@ object DocumentSources {
     val gone = up.select(col("doc_id"))
       .union(deleteKeys.select(col("doc_id")))
     val merged = base.join(gone, Seq("doc_id"), "left_anti").unionByName(upLive)
-    val staging = s"$path-staging"
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    val fs = rootFs
-    affected.foreach { b =>
-      val dst = new org.apache.hadoop.fs.Path(path, s"bucket=$b")
-      val src = new org.apache.hadoop.fs.Path(staging, s"bucket=$b")
-      val parked = new org.apache.hadoop.fs.Path(oldRoot, s"bucket=$b")
-      if (fs.exists(dst)) {
-        mustFs(fs.mkdirs(oldRoot), s"mkdirs $oldRoot")
-        mustFs(fs.rename(dst, parked), s"park $dst")
-      }
-      if (fs.exists(src)) mustFs(fs.rename(src, dst), s"swap in $src")
-      if (fs.exists(parked)) mustFs(fs.delete(parked, true), s"drop $parked")
-    }
-    mustFs(fs.delete(new org.apache.hadoop.fs.Path(staging), true),
-      s"drop $staging")
-    if (fs.exists(oldRoot))
-      mustFs(fs.delete(oldRoot, true), s"drop $oldRoot")
+    merged.write.mode("overwrite").partitionBy("bucket")
+      .parquet(StoreSwap.stagingPath(path))
+    StoreSwap.swapDirs(fs, path, affected.map(b => s"bucket=$b"),
+      "mergeUpsertBuckets")
     affected
   }
 
@@ -253,12 +225,12 @@ object DocumentSources {
     * (with a manifest-based table format this copy becomes a metadata
     * move — the filesystem engine pays it for crash safety, see below).
     *
-    * Crash safety reuses [[mergeUpsertBuckets]]' proven park/swap/restore
-    * protocol verbatim: the replacement dir is FULLY built in a staging
-    * sibling before the live dir is touched, then park → rename-in → drop,
-    * every rename/delete boolean checked; a recovery sweep at call start
-    * restores parked dirs with no live twin. The live tree is never in a
-    * mixed state.
+    * Crash safety is [[StoreSwap]]'s partition-directory protocol: every
+    * replacement dir is FULLY built in the staging tree before any live
+    * dir is touched, then [[StoreSwap.swapDirs]] parks → renames in →
+    * drops, every rename/delete boolean checked; the
+    * [[StoreSwap.recoverDirs]] sweep at call start restores parked dirs
+    * with no live twin. The live tree is never in a mixed state.
     *
     * Scale shape: bin assignment is driver-side over the LISTING only
     * (names + lengths — the same metadata any planner reads; no data
@@ -278,26 +250,13 @@ object DocumentSources {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mustFs(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"compactFiles: filesystem step failed (returned false): $what")
-    val oldRoot = new Path(s"$path-old")
-    if (fs.exists(oldRoot)) { // recovery sweep — see mergeUpsertBuckets
-      fs.listStatus(oldRoot).foreach { st =>
-        val live = new Path(root, st.getPath.getName)
-        if (!fs.exists(live))
-          mustFs(fs.rename(st.getPath, live), s"restore ${st.getPath}")
-        else mustFs(fs.delete(st.getPath, true), s"drop parked ${st.getPath}")
-      }
-      mustFs(fs.delete(oldRoot, true), s"drop $oldRoot")
-    }
+    StoreSwap.recoverDirs(fs, path, "compactFiles")
     val partDirs = fs.listStatus(root).filter(st =>
       st.isDirectory && st.getPath.getName.contains("=")).sortBy(_.getPath.getName)
     require(partDirs.nonEmpty,
       s"compactFiles: no key=value partition dirs under $path")
-    val staging = new Path(s"$path-staging")
-    if (fs.exists(staging))
-      mustFs(fs.delete(staging, true), s"drop stale $staging")
+    val staging = new Path(StoreSwap.stagingPath(path))
+    val must = StoreSwap.mustFs("compactFiles") _
     val manifest = partDirs.map { dirSt =>
       val dir = dirSt.getPath
       val files = fs.listStatus(dir)
@@ -316,11 +275,11 @@ object DocumentSources {
       }
       if (bins.length < files.length) {
         val stagedDir = new Path(staging, dir.getName)
-        mustFs(fs.mkdirs(stagedDir), s"mkdirs $stagedDir")
-        bins.zipWithIndex.foreach { case ((binFiles, _), _) =>
+        must(fs.mkdirs(stagedDir), s"mkdirs $stagedDir")
+        bins.foreach { case (binFiles, _) =>
           if (binFiles.length == 1) {
             val f = binFiles.head.getPath
-            mustFs(org.apache.hadoop.fs.FileUtil.copy(
+            must(org.apache.hadoop.fs.FileUtil.copy(
               fs, f, fs, new Path(stagedDir, f.getName), false, false,
               spark.sparkContext.hadoopConfiguration), s"copy $f")
           } else {
@@ -329,17 +288,12 @@ object DocumentSources {
               .write.mode("append").parquet(stagedDir.toString)
           }
         }
-        // swap: park live, staged in, drop parked (all booleans checked)
-        mustFs(fs.mkdirs(oldRoot), s"mkdirs $oldRoot")
-        val parked = new Path(oldRoot, dir.getName)
-        mustFs(fs.rename(dir, parked), s"park $dir")
-        mustFs(fs.rename(stagedDir, dir), s"swap in $stagedDir")
-        mustFs(fs.delete(parked, true), s"drop $parked")
         (dir.getName, files.length.toLong, bytesIn, bins.length.toLong)
       } else (dir.getName, files.length.toLong, bytesIn, files.length.toLong)
     }
-    if (fs.exists(staging)) mustFs(fs.delete(staging, true), s"drop $staging")
-    if (fs.exists(oldRoot)) mustFs(fs.delete(oldRoot, true), s"drop $oldRoot")
+    StoreSwap.swapDirs(fs, path,
+      manifest.collect { case (name, in, _, out) if out < in => name }.toSeq,
+      "compactFiles")
     import spark.implicits._
     manifest.toSeq
       .toDF("partition", "files_in", "bytes_in", "files_out")
@@ -389,20 +343,18 @@ object DocumentSources {
     * key would be an anti-join no-op but would corrupt density math),
     * unioned with the existing DV, de-duplicated, and swapped in whole —
     * the DV is O(deleted keys), so a full rewrite of it is the cheap
-    * path; the park/rename/drop root swap (booleans checked, recovery
-    * sweep at next read) reuses [[mergeUpsertBuckets]]' protocol at root
-    * granularity. The base tree is NOT touched.
+    * path; the swap is [[StoreSwap]]'s root-granularity protocol
+    * (booleans checked, recovery sweep at next touch). The base tree is
+    * NOT touched; its partition-directory recovery sweep still runs, so
+    * any touch of the table heals a crashed base-bucket swap.
     */
   def softDelete(spark: SparkSession, basePath: String, dvPath: String,
                  deleteKeys: DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(dvPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mustFs(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"softDelete: filesystem step failed (returned false): $what")
-    recoverRootSwap(fs, dvPath)
-    recoverBucketSwap(new Path(basePath)
+    StoreSwap.recover(fs, dvPath, "softDelete")
+    StoreSwap.recoverDirs(new Path(basePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration),
       basePath, "softDelete")
     val base = spark.read.parquet(basePath).select("bucket", "doc_id")
@@ -441,8 +393,8 @@ object DocumentSources {
     // (mergeUpsertBuckets/softDelete/applyDeletionVectors serialize
     // writes); a reader racing an in-flight swap between park and
     // rename-in would restore the bucket the writer just parked.
-    recoverRootSwap(fs, dvPath, sweepStaging = false)
-    recoverBucketSwap(new org.apache.hadoop.fs.Path(basePath)
+    StoreSwap.recover(fs, dvPath, "readVisible", sweepStaging = false)
+    StoreSwap.recoverDirs(new org.apache.hadoop.fs.Path(basePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration),
       basePath, "readVisible", sweepStaging = false)
     val base = spark.read.parquet(basePath)
@@ -454,21 +406,21 @@ object DocumentSources {
   /** Compaction decision + execution: buckets whose delete density
     * reaches `minPermille` are rewritten with visible rows only (the
     * read prunes to exactly those bucket dirs) and their DV rows
-    * dropped; sparse buckets keep carrying their DV. Per-bucket
-    * park/swap/restore as in [[mergeUpsertBuckets]]. Returns the
-    * decision manifest `(bucket, rows, deleted, rewritten)` — one row
-    * per live bucket.
+    * dropped; sparse buckets keep carrying their DV. The base buckets
+    * swap through [[StoreSwap.swapDirs]] and the shrunk DV tree through
+    * [[StoreSwap.swapIn]]; the DV swap runs after the base swap, so a
+    * crash between them leaves the compacted buckets' DV rows live
+    * (visibility stays correct; the next compaction re-applies them).
+    * Returns the decision manifest `(bucket, rows, deleted, rewritten)`
+    * — one row per live bucket.
     */
   def applyDeletionVectors(spark: SparkSession, basePath: String,
                            dvPath: String, minPermille: Long): DataFrame = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(basePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mustFs(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"applyDeletionVectors: filesystem step failed (returned false): $what")
-    recoverRootSwap(fs, dvPath)
-    recoverBucketSwap(fs, basePath, "applyDeletionVectors")
+    StoreSwap.recover(fs, dvPath, "applyDeletionVectors")
+    StoreSwap.recoverDirs(fs, basePath, "applyDeletionVectors")
     val totals = spark.read.parquet(basePath)
       .groupBy("bucket").agg(count(lit(1)).as("rows"))
     val dvExists = fs.exists(new Path(dvPath))
@@ -492,30 +444,16 @@ object DocumentSources {
     if (dense.nonEmpty) {
       val visible = readVisible(spark, basePath, dvPath)
         .where(col("bucket").isin(dense.map(Int.box): _*))
-      val staging = s"$basePath-staging"
-      visible.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-      val oldRoot = new Path(s"$basePath-old")
-      dense.foreach { b =>
-        val dst = new Path(basePath, s"bucket=$b")
-        val src = new Path(staging, s"bucket=$b")
-        val parked = new Path(oldRoot, s"bucket=$b")
-        mustFs(fs.mkdirs(oldRoot), s"mkdirs $oldRoot")
-        mustFs(fs.rename(dst, parked), s"park $dst")
-        if (fs.exists(src)) mustFs(fs.rename(src, dst), s"swap in $src")
-        mustFs(fs.delete(parked, true), s"drop $parked")
-      }
-      mustFs(fs.delete(new Path(staging), true), s"drop $staging")
-      if (fs.exists(oldRoot)) mustFs(fs.delete(oldRoot, true), s"drop $oldRoot")
+      visible.write.mode("overwrite").partitionBy("bucket")
+        .parquet(StoreSwap.stagingPath(basePath))
+      StoreSwap.swapDirs(fs, basePath, dense.map(b => s"bucket=$b"),
+        "applyDeletionVectors")
       // the compacted buckets' DV rows are now applied — drop them
-      val remaining = readDv(spark, dvPath)
+      readDv(spark, dvPath)
         .where(!col("bucket").isin(dense.map(Int.box): _*))
-      val dvStaging = s"$dvPath-staging"
-      remaining.write.mode("overwrite").partitionBy("bucket").parquet(dvStaging)
-      val live = new Path(dvPath)
-      val dvParked = new Path(s"$dvPath-old")
-      mustFs(fs.rename(live, dvParked), s"park $live")
-      mustFs(fs.rename(new Path(dvStaging), live), s"swap in $dvStaging")
-      mustFs(fs.delete(dvParked, true), s"drop $dvParked")
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(StoreSwap.stagingPath(dvPath))
+      StoreSwap.swapIn(fs, dvPath, "applyDeletionVectors")
     }
     import spark.implicits._
     manifest.map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
@@ -523,60 +461,4 @@ object DocumentSources {
       .toDF("bucket", "rows", "deleted", "rewritten")
       .orderBy("bucket")
   }
-
-  /** Bucket-granularity recovery sweep for a parked `$path-old` tree:
-    * a `bucket=b` dir parked there with no live twin under `path` means a
-    * per-bucket swap crashed between park and rename-in — restore it
-    * (for the DV base tree the bucket's DV rows are still live, since the
-    * DV swap runs after the base swap, so visibility stays correct and
-    * the next compaction re-applies); with a live twin the swap completed
-    * — drop the leftover. Stale `$path-staging` from a crashed writer is
-    * dropped too. Shared by [[mergeUpsertBuckets]] and every DV entry
-    * point ([[softDelete]]/[[readVisible]]/[[applyDeletionVectors]]) so
-    * ANY next touch of the table heals a crashed base-bucket swap — the
-    * gap a round-10 review found: the base tree's parked buckets
-    * previously had no sweeper, so a crash there silently dropped the
-    * bucket from every later read.
-    */
-  private def recoverBucketSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                path: String, who: String,
-                                sweepStaging: Boolean = true): Unit = {
-    import org.apache.hadoop.fs.Path
-    def mustFs(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"$who: filesystem step failed (returned false): $what")
-    val root = new Path(path)
-    val oldRoot = new Path(s"$path-old")
-    if (fs.exists(oldRoot)) {
-      fs.listStatus(oldRoot).foreach { st =>
-        val live = new Path(root, st.getPath.getName)
-        if (!fs.exists(live))
-          mustFs(fs.rename(st.getPath, live), s"restore ${st.getPath}")
-        else
-          mustFs(fs.delete(st.getPath, true), s"drop parked ${st.getPath}")
-      }
-      mustFs(fs.delete(oldRoot, true), s"drop $oldRoot")
-    }
-    // read-only entry points pass sweepStaging = false: the parked-bucket
-    // restore is required for a correct read after a crashed swap, but a
-    // stale staging tree is harmless to readers — and under any writer
-    // CONCURRENT with the read, deleting $path-staging here would destroy
-    // that writer's in-flight work
-    val staging = new Path(s"$path-staging")
-    if (sweepStaging && fs.exists(staging))
-      mustFs(fs.delete(staging, true), s"drop stale $staging")
-  }
-
-  /** Root-granularity recovery sweep for the DV swap: a `-old` sibling
-    * with no live root means the swap crashed between park and rename-in
-    * — restore it; with a live root the swap completed — drop it. Shared
-    * by every DV entry point so ANY next touch heals a crashed swap.
-    * The protocol itself lives in [[StoreSwap]] (one definition, also
-    * the ANN index rebuild's swap); readers pass sweepStaging = false —
-    * see recoverBucketSwap.
-    */
-  private def recoverRootSwap(fs: org.apache.hadoop.fs.FileSystem,
-                              path: String,
-                              sweepStaging: Boolean = true): Unit =
-    StoreSwap.recover(fs, path, "recoverRootSwap", sweepStaging)
 }

@@ -122,9 +122,7 @@ object StoredRelations {
       if (!isValid(path, fp)) {
         val fs = new org.apache.hadoop.fs.Path(path)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def mustFs(ok: Boolean, what: String): Unit =
-          if (!ok) throw new java.io.IOException(
-            s"StoredRelations($name): filesystem step failed: $what")
+        val must = StoreSwap.mustFs(s"StoredRelations($name)") _
         // per-process tmp sibling: two JVMs building concurrently (a test
         // run beside a bench) must not interleave writes into one staging
         // dir; both then race the final rename, and either winner's
@@ -135,8 +133,8 @@ object StoredRelations {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(tmp, MarkerFile), fp)
         val live = new org.apache.hadoop.fs.Path(path)
-        if (fs.exists(live)) mustFs(fs.delete(live, true), s"drop stale $path")
-        mustFs(fs.rename(new org.apache.hadoop.fs.Path(tmp), live),
+        if (fs.exists(live)) must(fs.delete(live, true), s"drop stale $path")
+        must(fs.rename(new org.apache.hadoop.fs.Path(tmp), live),
           s"swap in $tmp")
       }
     }

@@ -925,9 +925,7 @@ object StreamingOps {
     graft.Scratch.dir(
       s"$scratchName-pid${ProcessHandle.current().pid()}")
 
-  private def mustFs(ok: Boolean, what: String): Unit =
-    if (!ok) throw new java.io.IOException(
-      s"streaming staging: filesystem step failed: $what")
+  private val mustFs = graft.sources.StoreSwap.mustFs("streaming staging") _
 
   /** Shared staging scaffold of the driver-oracled streaming ingests
     * (q179/q180/q181/q185): wipe the PID-scoped base, write `chunked`
@@ -940,12 +938,12 @@ object StreamingOps {
     * chunk column, keeping the schema). `mtimeOf`, when set, stamps
     * strictly increasing mtimes so FileStreamSource lists the files in
     * chunk order — the ordered-replay contract. A chunk with no rows
-    * writes no dir and is skipped. Returns (base, inputDir).
+    * writes no dir and is skipped.
     */
   private def stageChunkedInput(spark: SparkSession, chunked: DataFrame,
                                 chunkCount: Int, scratchName: String,
                                 mtimeOf: Option[(Int, Int) => Long] = None)
-      : (String, String) = {
+      : Staged = {
     val base = pidScopedBase(scratchName)
     val conf = spark.sparkContext.hadoopConfiguration
     val basePath = new org.apache.hadoop.fs.Path(base)
@@ -972,18 +970,25 @@ object StreamingOps {
     }
     mustFs(fs.delete(new org.apache.hadoop.fs.Path(stage), true),
       s"drop staging $stage")
-    (base, inputDir)
+    Staged(base, inputDir, chunked.drop("chunk").schema)
   }
+
+  /** A staged replay input: the PID-scoped scratch base, its `input` dir
+    * of chunk files, and their schema. The schema comes from the staged
+    * frame, so no reader of `inputDir` pays a schema-inference job.
+    */
+  private final case class Staged(base: String, inputDir: String,
+                                  schema: org.apache.spark.sql.types.StructType)
 
   /** Wipe the PID-scoped scratch for `scratchName` and stage `docsPath`'s
     * `(doc_id, text)` rows into `chunks` single-file parquet chunks
     * under `<base>/input` by the deterministic `doc_id mod chunks`
     * split — the shared fresh-ingest staging of the oracle-verified
-    * streaming queries (q179/q180). Returns the (base, inputDir) pair.
+    * streaming queries (q179/q180).
     */
   private def stageDocChunks(spark: SparkSession, docsPath: String,
                              chunks: Int,
-                             scratchName: String): (String, String) = {
+                             scratchName: String): Staged = {
     require(chunks > 0, "stageDocChunks needs at least one chunk")
     stageChunkedInput(spark,
       spark.read.parquet(docsPath)
@@ -1020,9 +1025,9 @@ object StreamingOps {
   def heavyHittersViaStream(spark: SparkSession, docsPath: String,
                             chunks: Int, capacity: Int, den: Long,
                             scratchName: String): DataFrame = {
-    val (base, inputDir) = stageDocChunks(spark, docsPath, chunks, scratchName)
-    val schema = spark.read.parquet(inputDir).schema
-    val streamTerms = spark.readStream.schema(schema)
+    val staged = stageDocChunks(spark, docsPath, chunks, scratchName)
+    import staged.{base, inputDir}
+    val streamTerms = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", 1).parquet(inputDir)
       .select(explode(graft.ops.TextOps.tokenize(
         coalesce(col("text"), lit("")))).as("tok"))
@@ -1031,7 +1036,7 @@ object StreamingOps {
     try q.processAllAvailable() finally q.stop()
     val cands = mergedHeavyHitterCandidates(spark, s"$base/summaries", capacity)
     import spark.implicits._
-    val batchTerms = spark.read.parquet(inputDir)
+    val batchTerms = spark.read.schema(staged.schema).parquet(inputDir)
       .select(explode(graft.ops.TextOps.tokenize(
         coalesce(col("text"), lit("")))).as("tok"))
     val candDf = broadcast(cands.toDF("tok"))
@@ -1083,14 +1088,14 @@ object StreamingOps {
   private def exactDedupReplay(spark: SparkSession, docsPath: String,
                                chunks: Int, stopAfterFiles: Option[Int],
                                scratchName: String): DataFrame = {
-    val (base, inputDir) = stageDocChunks(spark, docsPath, chunks, scratchName)
+    val staged = stageDocChunks(spark, docsPath, chunks, scratchName)
     // the declared schema spares this read a schema-inference job
-    val spanSeconds = spark.read.schema("doc_id LONG").parquet(inputDir)
+    val spanSeconds = spark.read.schema("doc_id LONG").parquet(staged.inputDir)
       .agg(max(col("doc_id"))).head() match {
       case r if r.isNullAt(0) => 0L // empty corpus: any horizon works
       case r => r.getLong(0)
     }
-    replayToSink(spark, base, inputDir, "survivors", stopAfterFiles) { src =>
+    replayToSink(spark, staged, "survivors", stopAfterFiles) { src =>
       exactDedupStream(
         src().withColumn("ts",
           (lit(1700000000L) + col("doc_id")).cast("timestamp")),
@@ -1151,7 +1156,7 @@ object StreamingOps {
                                       chunks: Int,
                                       scratchName: String,
                                       cutsUs: Option[Seq[Long]] = None)
-      : (String, String) = {
+      : Staged = {
     require(chunks > 0, "stageEventChunksOrdered needs at least one chunk")
     val ev = graft.Tables.events(spark, dir)
     // ONE aggregate pass computes the span AND the sentinel-absence
@@ -1225,10 +1230,9 @@ object StreamingOps {
                                     chunks: Int, stopAfterFiles: Option[Int],
                                     gapMicrosOf: Long => Long,
                                     scratchName: String): DataFrame = {
-    val (base, inputDir) = stageEventChunksOrdered(spark, dir, chunks,
-      scratchName)
+    val staged = stageEventChunksOrdered(spark, dir, chunks, scratchName)
     import spark.implicits._
-    replayToSink(spark, base, inputDir, "sessions", stopAfterFiles) { src =>
+    replayToSink(spark, staged, "sessions", stopAfterFiles) { src =>
       dynamicGapSessionStream(
         src().select(col("user_id"), col("ts"), col("value")).as[UserEvent],
         gapMicrosOf).toDF
@@ -1296,11 +1300,11 @@ object StreamingOps {
         .orderBy("c_us", "v_us").limit(1).collect().headOption
         .map(r => r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2L)
     }
-    val (base, inputDir) = stageEventChunksOrdered(spark, dir, chunks,
+    val staged = stageEventChunksOrdered(spark, dir, chunks,
       scratchName, cutsUs = cutUs.map(Seq(_)))
     // an explicit cut stages [before-cut, after-cut, flush]
     val stop = if (cutUs.isDefined) Some(1) else stopAfterFiles
-    val out = replayToSink(spark, base, inputDir, "matches", stop) { src =>
+    val out = replayToSink(spark, staged, "matches", stop) { src =>
       val views = src().where(col("event_type") === "view")
         .select(col("event_id").as("view_id"), col("ts"), col("user_id"))
       val clicks = src().where(col("event_type") === "click")
@@ -1362,11 +1366,11 @@ object StreamingOps {
     * replay) is gated in StreamingParitySpec: it needs checkpoint surgery
     * no clean run should perform.
     */
-  private def replayToSink(spark: SparkSession, base: String,
-                           inputDir: String, sink: String,
+  private def replayToSink(spark: SparkSession, input: Staged, sink: String,
                            stopAfterFiles: Option[Int])
                           (plan: (() => DataFrame) => DataFrame): DataFrame = {
     import org.apache.hadoop.fs.Path
+    import input.{base, inputDir}
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pendingDir = new Path(s"$base/pending")
     stopAfterFiles.foreach { stop =>
@@ -1393,26 +1397,28 @@ object StreamingOps {
           s"hold back ${p.getName}")
       }
     }
-    val schema = spark.read.parquet(inputDir).schema
-    def source(): DataFrame = spark.readStream.schema(schema)
+    def source(): DataFrame = spark.readStream.schema(input.schema)
       .option("maxFilesPerTrigger", 1).parquet(inputDir)
-    def runOnce(): StreamingQuery = {
-      val writer = plan(() => source()).writeStream
+    // returns the plan's schema too: the sink's files carry it, so the
+    // read-back declares it instead of inferring it with a job
+    def runOnce(): (StreamingQuery, org.apache.spark.sql.types.StructType) = {
+      val out = plan(() => source())
+      val writer = out.writeStream
         .option("checkpointLocation", s"$base/checkpoint")
         .outputMode(OutputMode.Append())
         .format("parquet")
         .option("path", s"$base/$sink")
       val q = withStatePartitions(spark)(writer.start())
       try q.processAllAvailable() finally q.stop()
-      q
+      (q, out.schema)
     }
-    val first = runOnce()
+    val (first, sinkSchema) = runOnce()
     if (stopAfterFiles.isDefined) {
       fs.listStatus(pendingDir).map(_.getPath).foreach { p =>
         mustFs(fs.rename(p, new Path(inputDir, p.getName)),
           s"release ${p.getName}")
       }
-      val second = runOnce()
+      val (second, _) = runOnce()
       require(first.id == second.id,
         s"restart must resume the SAME query identity from the checkpoint " +
           s"(got ${first.id} then ${second.id})")
@@ -1420,7 +1426,7 @@ object StreamingOps {
         "the execution must span two distinct stream starts " +
           s"(runId repeated: ${first.runId})")
     }
-    spark.read.parquet(s"$base/$sink")
+    spark.read.schema(sinkSchema).parquet(s"$base/$sink")
   }
 
   /** Shuffle partitions of the replay streams' stateful operators. The

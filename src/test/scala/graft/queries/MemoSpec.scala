@@ -75,6 +75,21 @@ class MemoSpec extends graft.SparkSpec {
     assert(SessionMemos.entries == 0)
   }
 
+  test("a query-scoped persist of a memo frame's plan leaves the memo cached") {
+    val frame = Memo.frame((s, d) => s.range(d.length.toLong).toDF())
+    val df = frame(spark, "abcde")
+    assert(df.count() == 5)
+    // a fresh Dataset over the same plan: CacheManager matches it to the memo
+    val fresh = spark.range(5L).toDF()
+    assert(fresh.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    graft.CacheScope.persist(fresh)
+    graft.CacheScope.releaseAll()
+    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "the query boundary evicted a session memo's cache")
+    SessionMemos.evictAll()
+    assert(df.storageLevel == StorageLevel.NONE)
+  }
+
   test("a memo constructed after an eviction is evicted by the next one") {
     SessionMemos.evictAll()
     val released = new AtomicInteger()

@@ -142,4 +142,36 @@ class CompactionSpec extends SparkSpec {
     assert(!fs.exists(oldRoot), "recovery must clear the -old tree")
     assert(content(root) === before, "parked partition must be restored")
   }
+
+  test("recovery sweep drops a parked dir that has a live twin") {
+    import sqlImplicits._
+    // one file per partition: the compaction rewrites no dir, so only the
+    // sweep can keep the parked copy out of the live tree
+    val root = seed("compact_spec_e", tasks = 1)
+    val before = content(root)
+    // simulate a crash after rename-in, before the drop: part=0 is live
+    // and a superseded copy (distinct rows) still sits in the -old tree
+    val oldRoot = new Path(s"$root-old")
+    Seq((-1L, "superseded")).toDF("doc_id", "text")
+      .write.parquet(new Path(oldRoot, "part=0").toString)
+    DocumentSources.compactFiles(spark, root, targetBytes = 1L << 30)
+    assert(!fs.exists(oldRoot), "recovery must clear the -old tree")
+    assert(content(root) === before, "the live twin must win over the parked copy")
+  }
+
+  test("recovery sweep drops a stale -staging tree") {
+    import sqlImplicits._
+    val root = seed("compact_spec_f")
+    val before = content(root)
+    // a crashed compaction's half-built staging dir: left in place, its
+    // rows would be swapped in beside the fresh bins as duplicates
+    val staging = new Path(s"$root-staging")
+    Seq((0L, "stale")).toDF("doc_id", "text")
+      .write.parquet(new Path(staging, "part=0").toString)
+    val manifest = DocumentSources.compactFiles(spark, root, targetBytes = 1L << 30)
+    assert(manifest.where(col("files_out") < col("files_in")).count() === 2,
+      "both fragmented partitions must be rebuilt through the staging tree")
+    assert(!fs.exists(staging), "the staging tree must be dropped")
+    assert(content(root) === before, "stale staged rows must not reach the tree")
+  }
 }

@@ -204,4 +204,43 @@ class MergeUpsertSpec extends SparkSpec {
       "parked bucket content must survive the interrupted swap")
     assert(!oldDir.exists, "recovery must clean the -old tree")
   }
+
+  test("recovery sweep drops a parked bucket that has a live twin") {
+    import graft.sources.DocumentSources.mergeUpsertBuckets
+    val root = java.nio.file.Files.createTempDirectory("graft-mu-twin")
+      .resolve("tree").toString
+    writeBase(root, Seq((1L, "a"), (2L, "b"), (5L, "c")))
+    // simulate a crash after rename-in, before the drop: bucket=1 is live
+    // and a superseded copy (distinct rows) still sits in the -old tree
+    Seq((9L, "superseded")).toDF("doc_id", "text")
+      .write.parquet(s"$root-old/bucket=1")
+    val oldDir = new java.io.File(s"$root-old")
+    assert(oldDir.exists)
+    val up = Seq((2L, "b2")).toDF("doc_id", "text")
+    val del = spark.emptyDataFrame.selectExpr("CAST(1 AS LONG) AS doc_id")
+      .where(lit(false))
+    mergeUpsertBuckets(spark, root, up, del, nBuckets)
+    assert(readTree(root) == Map(1L -> "a", 2L -> "b2", 5L -> "c"),
+      "the live twin must win over the parked copy")
+    assert(!oldDir.exists, "recovery must clean the -old tree")
+  }
+
+  test("recovery sweep drops a stale -staging tree") {
+    import graft.sources.DocumentSources.mergeUpsertBuckets
+    val root = java.nio.file.Files.createTempDirectory("graft-mu-stage")
+      .resolve("tree").toString
+    // a stale staging tree beside a missing base: the bootstrap writes the
+    // live tree directly, so only the sweep removes it (on the merge path
+    // the staging write would overwrite it anyway)
+    Seq((9L, "stale")).toDF("doc_id", "text")
+      .write.parquet(s"$root-staging/bucket=1")
+    val staging = new java.io.File(s"$root-staging")
+    assert(staging.exists)
+    val up = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+    val del = spark.emptyDataFrame.selectExpr("CAST(1 AS LONG) AS doc_id")
+      .where(lit(false))
+    mergeUpsertBuckets(spark, root, up, del, nBuckets)
+    assert(readTree(root) == Map(1L -> "a", 2L -> "b"))
+    assert(!staging.exists, "recovery must drop the stale staging tree")
+  }
 }
