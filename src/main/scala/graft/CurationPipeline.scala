@@ -47,6 +47,17 @@ object CurationPipeline {
     * HashOps.contentKey for the collision stance). Shared by both
     * stage-4 retention policies; public so a session can materialize it
     * ONCE and feed both (see CurationQueries' memoized relation).
+    *
+    * The gate drops failing docs with a generator, not a Filter: each
+    * doc becomes a one-row array when it passes and null otherwise, and
+    * `inline` emits the passing rows. A `.where(qualityPass)` would have
+    * Catalyst substitute the redact/tokenize/quality aliases into the
+    * predicate and push it below [[Tables.documents]]' rebalance, where
+    * the regexes run in the single scan task; the generator keeps all
+    * three stages above the exchange, on every core. The inline array
+    * must not grow an inferred `size(...) > 0` filter, which is why
+    * `InferFiltersFromGenerate` stays excluded ([[Tables.SessionConf]]).
+    * A null gate (null text) drops the doc, as the Filter did.
     */
   def exactStage(docs: DataFrame): DataFrame = {
     val redacted = docs.select(col("doc_id"),
@@ -56,8 +67,8 @@ object CurationPipeline {
     val quality = toked.select(
       (Seq(col("doc_id"), col("text"), col("toks")) ++
         TextAnalysisOps.qualityColumns(col("text"), col("toks"))): _*)
-    val passed = quality.where(TextAnalysisOps.qualityPass)
-      .select("doc_id", "text", "toks")
+    val passed = quality.select(inline(when(TextAnalysisOps.qualityPass,
+      array(struct(col("doc_id"), col("text"), col("toks"))))))
     passed
       .withColumn("content_key", graft.ops.HashOps.contentKey(col("text")))
       .withColumn("canonical_id",

@@ -20,6 +20,14 @@ object Tables {
     * (observed 1.5x slowdown on the shingle queries). Our generators
     * already guard emptiness explicitly, so the inferred filters only
     * duplicate work.
+    *
+    * Two operators depend on it to drop rows without a Filter node:
+    * `DedupOps.shingles` (short docs yield an empty shingle array) and
+    * `CurationPipeline.exactStage` (the quality gate inlines a one-row
+    * array or null). With the rule back, the inferred filter would be
+    * pushed below [[rebalance]]'s exchange and re-run the whole computed
+    * array in the single scan task. PlanShapeSpec checks that
+    * [[configure]] sets it.
     */
   val SessionConf: Map[String, String] = Map(
     "spark.sql.optimizer.excludedRules" ->
@@ -59,11 +67,16 @@ object Tables {
     * once across the cores; at cluster scale a table has orders of
     * magnitude more row groups than cores and this is a no-op. Column
     * pruning still reaches the scan. So do deterministic filters, and that
-    * cuts both ways: Catalyst pushes them below the Repartition, so they
-    * run inside the single-partition scan task, not across the cores. Only
-    * projections and operators above the exchange are spread; an
-    * expensive predicate (a regex quality gate, PII redaction in a filter)
-    * still runs on one core.
+    * cuts both ways: Catalyst pushes them below the Repartition, with the
+    * projections they reference substituted in, so they run inside the
+    * single-partition scan task, not across the cores. Only projections
+    * and operators above the exchange are spread. A consumer that gates
+    * rows on an expensive computed predicate therefore drops them with a
+    * generator instead of a Filter — `inline(when(pass, array(struct(..))))`
+    * or `explode` of an array that is empty when the row fails — which
+    * Catalyst does not push (see [[SessionConf]]); the quality gate in
+    * `CurationPipeline.exactStage` and the short-doc guard in
+    * `DedupOps.shingles` do this.
     *
     * The relational/event tables deliberately SKIP it (measured: q12-family
     * queries got 1.5-2x slower with it): their queries aggregate or join

@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * Scale: CountVectorizer's vocab build is one distributed agg; LDA online
   * fit is maxIter passes over mini-batched corpus (each a shuffle);
   * transform is narrow. describeTopics is k×10 rows — driver-small by
-  * construction, broadcast when joined against docs.
+  * construction, collected locally and inlined into the per-doc tag
+  * projection.
   */
 object TopicPipeline {
 
@@ -75,7 +76,7 @@ object TopicPipeline {
     require(cfg.maxDF < 1.0, "maxDF is interpreted as a document fraction")
     val corpus = featurize(docs).select(col("doc_id"), col("terms"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDocs = corpus.count().toDouble
+    val nDocs = corpus.count()
     val vocab = corpus
       .select(explode(col("terms")).as("term"), col("doc_id"))
       .groupBy("term")
@@ -90,15 +91,17 @@ object TopicPipeline {
     val vectorized = cv.transform(corpus)
       .select("doc_id", "features")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val k = math.max(2, math.min(cfg.k, vectorized.count().toInt))
-    // vectorized is materialized by the count above; the staged term
-    // corpus has no further consumer
-    corpus.unpersist(blocking = false)
+    // the vectorize pass is one narrow map over the staged corpus, so its
+    // row count is the one counted above
+    val k = math.max(2, math.min(cfg.k, nDocs.toInt))
     val lda = new LDA()
       .setK(k).setMaxIter(cfg.maxIter).setSeed(cfg.seed)
       .setOptimizer("online")
       .setFeaturesCol("features")
       .fit(vectorized)
+    // the fit's first pass materialized vectorized from the staged term
+    // corpus, which has no further consumer
+    corpus.unpersist(blocking = false)
     Fitted(cv, lda, vectorized, cfg)
   }
 
@@ -121,32 +124,39 @@ object TopicPipeline {
     f.lda.transform(f.tokenized)
       .select(col(idCol), vector_to_array(col("topicDistribution")).as("topic_dist"))
 
+  /** Topic → its top `termsPerTopic` terms in rank order, indexed by
+    * topic id. Collected locally: the fitted model's topics are local,
+    * so `describeTopics` is a local relation and collecting it runs no
+    * Spark job.
+    */
+  private def topicTermTable(f: Fitted): Seq[Seq[String]] = {
+    val vocab = f.cv.vocabulary
+    f.lda.describeTopics(f.cfg.termsPerTopic)
+      .select("topic", "termIndices").collect().sortBy(_.getInt(0))
+      .map(_.getSeq[Int](1).map(vocab(_)).toSeq).toSeq
+  }
+
   /** Per-doc tags: distinct top terms of the 2 dominant topics, order
     * preserved, truncated to nTags — T3 + J3 + J4 + T7 (:199-212).
+    *
+    * One narrow projection per document: the k-row topic → terms table
+    * ([[topicTermTable]]) is inlined as a literal and each doc looks up
+    * its two dominant topics in it — no join, no regroup, no shuffle.
+    * `doc_id` is the corpus key (FIXTURES.md), so one row per document is
+    * what regrouping the per-topic rows by `doc_id` produced.
     */
   def tags(f: Fitted, idCol: String = "doc_id"): DataFrame = {
-    val dist = topicDistributions(f, idCol)
-    // top-2 dominant topics per doc, highest probability first
-    val dominant = dist
+    val table = typedlit(topicTermTable(f))
+    topicDistributions(f, idCol)
+      // top-2 dominant topics per doc, highest probability first
       .select(col(idCol),
         slice(reverse(array_sort(zip_with(
           col("topic_dist"),
           sequence(lit(0), size(col("topic_dist")) - 1).cast("array<double>"),
           (p, i) => struct(p.as("prob"), i.as("topic"))))), 1, 2).as("top2"))
-      .select(col(idCol), posexplode(col("top2")))
-      .select(col(idCol), (col("pos") + 1).as("topic_rank"),
-        col("col.topic").cast("long").as("topic"))
-    val perTopic = topicTerms(f)
-      .groupBy("topic")
-      .agg(array_agg(struct(col("term_rank"), col("term"))).as("ts"))
-      .select(col("topic"), transform(array_sort(col("ts")),
-        t => t.getField("term")).as("topic_terms"))
-    dominant
-      .join(broadcast(perTopic), Seq("topic"), "left")
-      .groupBy(col(idCol))
-      .agg(array_agg(struct(col("topic_rank"), col("topic_terms"))).as("ranked"))
       .select(col(idCol),
-        slice(array_distinct(flatten(transform(array_sort(col("ranked")),
-          r => r.getField("topic_terms")))), 1, f.cfg.nTags).as("tags"))
+        slice(array_distinct(flatten(transform(col("top2"),
+          t => element_at(table, t.getField("topic").cast("int") + 1)))),
+          1, f.cfg.nTags).as("tags"))
   }
 }

@@ -39,15 +39,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     row-compares it to the stored artifact on every test run, so a
   *     forgotten bump fails the suite instead of shipping stale pairs;
   *   - writes are crash-safe: build → write to a `.tmp` sibling →
-  *     fingerprint marker written LAST inside it → swap via checked
-  *     rename (the mergeUpsertBuckets rule: Hadoop rename/delete report
-  *     failure by returning false). A torn write leaves either the old
-  *     valid artifact or a fingerprint-less tmp dir that can never be
-  *     mistaken for valid.
+  *     fingerprint marker written LAST inside it → checked delete of the
+  *     stale artifact (Hadoop delete reports failure by returning false)
+  *     → publish by a rename that never replaces a live artifact. A torn
+  *     write leaves either the old valid artifact or a fingerprint-less
+  *     tmp dir that can never be mistaken for valid.
   *
   * Concurrency: per-artifact lock so parallel first consumers (test
-  * suites) build once; cross-process races are benign (last completed
-  * swap wins, both contents identical by determinism of the build).
+  * suites) build once; across processes the first publish wins and a
+  * later builder for the same fingerprint reads the winner's artifact
+  * (identical by determinism of the build), see [[publish]].
   */
 object StoredRelations {
 
@@ -125,8 +126,8 @@ object StoredRelations {
         val must = StoreSwap.mustFs(s"StoredRelations($name)") _
         // per-process tmp sibling: two JVMs building concurrently (a test
         // run beside a bench) must not interleave writes into one staging
-        // dir; both then race the final rename, and either winner's
-        // artifact is complete and identical by build determinism
+        // dir; both then race the publish, and the loser reads the
+        // winner's artifact, complete and identical by build determinism
         val tmp = s"$path.tmp-${java.lang.ProcessHandle.current.pid}"
         build.write.mode("overwrite").parquet(tmp)
         // marker LAST: its presence certifies the parquet write completed
@@ -134,11 +135,35 @@ object StoredRelations {
           java.nio.file.Paths.get(tmp, MarkerFile), fp)
         val live = new org.apache.hadoop.fs.Path(path)
         if (fs.exists(live)) must(fs.delete(live, true), s"drop stale $path")
-        must(fs.rename(new org.apache.hadoop.fs.Path(tmp), live),
-          s"swap in $tmp")
+        publish(tmp, path, fp)
       }
     }
     spark.read.parquet(path)
+  }
+
+  /** Move the finished staging dir `tmp` onto the live artifact `path`.
+    * The move is one `rename(2)` that fails when `path` already holds an
+    * artifact — a plain rename onto a directory that another JVM
+    * published since our delete would nest `tmp` INSIDE it. On that
+    * failure the other JVM's artifact is kept if it is valid for `fp`
+    * (same inputs and version, so the same rows by build determinism)
+    * and our staging dir is dropped; anything else fails loudly.
+    */
+  private[sources] def publish(tmp: String, path: String, fp: String): Unit = {
+    val src = java.nio.file.Paths.get(tmp)
+    try java.nio.file.Files.move(src, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    catch {
+      case e: java.io.IOException =>
+        if (!isValid(path, fp)) throw new java.io.IOException(
+          s"StoredRelations: could not publish $tmp onto $path, and the " +
+            "artifact there is not valid for this build", e)
+        rm(src.toFile)
+    }
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
   }
 
   private def isValid(path: String, fp: String): Boolean = {
@@ -172,9 +197,6 @@ object StoredRelations {
     */
   def gc(): Seq[(String, String)] = {
     val root = new java.io.File(graft.Scratch.dir("stored"))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
     Option(root.listFiles).getOrElse(Array.empty).toSeq
       .filter(_.isDirectory).sortBy(_.getName).flatMap { d =>
         val name = d.getName

@@ -124,6 +124,49 @@ class CurationPipelineSpec extends SparkSpec {
     assert(redacted.contains("<EMAIL>") && !redacted.contains("example.com"))
   }
 
+  test("curate equals the Filter-gated reference, null text and docs " +
+      "exactly at each quality threshold included") {
+    import graft.ops.{TextAnalysisOps, TextOps}
+    // stages 1-3 with the quality gate as a `.where`, the formulation the
+    // generator drop replaced
+    def filtered(docs: org.apache.spark.sql.DataFrame) = {
+      val toked = docs.select(col("doc_id"),
+          TextAnalysisOps.redactPii(col("text")).as("text"))
+        .select(col("doc_id"), col("text"),
+          TextOps.tokenize(col("text")).as("toks"))
+      toked.select((Seq(col("doc_id"), col("text"), col("toks")) ++
+          TextAnalysisOps.qualityColumns(col("text"), col("toks"))): _*)
+        .where(TextAnalysisOps.qualityPass)
+        .withColumn("content_key", graft.ops.HashOps.contentKey(col("text")))
+        .withColumn("canonical_id", min(col("doc_id")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("content_key")))
+        .where(col("doc_id") === col("canonical_id"))
+        .select("doc_id", "text", "toks")
+    }
+    val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    val docs = Seq(
+      (1L, base),
+      (2L, base),                                  // exact dup
+      (3L, base + " kilo"),                        // near dup
+      (10L, "aa bb cc dd ee"),                     // n_tokens = 5: pass
+      (11L, "aa bb cc dd"),                        // n_tokens = 4: fail
+      (12L, "ff ff ff ff ff gg gg gg gg gg"),      // ttr = 0.2: pass
+      (13L, "ff ff ff ff ff gg gg gg gg gg gg"),   // ttr < 0.2: fail
+      (14L, "a! b! c! d! eeeeeeee"),               // non-alnum = 0.2: pass
+      (15L, "a! b! c! d! eeeeeee!"),               // non-alnum = 0.25: fail
+      (16L, "the and of at in is it that was zebra"), // stopwords = 0.9: pass
+      (17L, "the and of at in is it that was was"),   // stopwords = 1.0: fail
+      (18L, "call +1 (555) 010-9999 or mail a.b@c.org now"), // redacted
+      (19L, null),
+      (20L, ""))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().toSeq
+    val got = rows(CurationPipeline.curate(docs))
+    assert(got == rows(CurationPipeline.curateFrom(filtered(docs))))
+    assert(got.map(_.getLong(0)) == Seq(1L, 10L, 12L, 14L, 16L, 18L))
+  }
+
   test("curateObserved collects input/output counters in the same action") {
     val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val docs = Seq(

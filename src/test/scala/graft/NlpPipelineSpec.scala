@@ -1,14 +1,14 @@
 package graft
 
 import graft.ml.TopicPipeline
-import graft.ops.{MetricOps, RelationalSummary, TagOps, TextOps}
+import graft.ops.{MetricOps, RelationalSummary, RelationalTags, TagOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** `NlpPipeline.run` assembles its result in one pass; these specs hold it
   * to the relational assembly it replaced (summary by the relational
-  * chain, joined back to the cleaned corpus, metrics self-joined on
-  * doc_id), column order included.
+  * chain, tags regrouped through a join, joined back to the cleaned
+  * corpus, metrics self-joined on doc_id), column order included.
   */
 class NlpPipelineSpec extends SparkSpec {
   import sqlImplicits._
@@ -23,7 +23,7 @@ class NlpPipelineSpec extends SparkSpec {
       .withColumn("summary",
         TextOps.truncateAtWordBoundary(col("summary"), cfg.summaryMaxLength))
     val tags =
-      if (cfg.useTopicTags) TopicPipeline.tags(TopicPipeline.fit(docs, cfg.topics))
+      if (cfg.useTopicTags) RelationalTags.tags(TopicPipeline.fit(docs, cfg.topics))
       else TagOps.fallbackTags(docs, cfg.nTags)
         .groupBy("doc_id")
         .agg(transform(array_sort(collect_list(struct(col("tag_rank"), col("tag")))),

@@ -57,6 +57,46 @@ class TopicPipelineSpec extends SparkSpec {
     }
   }
 
+  test("tags equal the relational regroup on seeded corpora, tied topic " +
+      "probabilities and empty or null text included") {
+    val words = Seq("spark", "query", "engine", "plans", "clusters", "shuffle",
+      "executor", "garden", "dogs", "ball", "pond", "flowers", "trees",
+      "grass", "river", "boats", "sails", "harbor", "ocean", "waves",
+      "the", "and", "café", "Ωmega")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getSeq[String](1))).sortBy(_._1).toSeq
+    Seq(11L, 23L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val texts = Seq.fill(40)(
+        Seq.fill(3 + rnd.nextInt(10))(words(rnd.nextInt(words.size))).mkString(" "))
+      val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
+        Seq((100L, ""), (101L, null: String))).toDF("doc_id", "text")
+      Seq(2, 3, 5).foreach { k =>
+        val f = TopicPipeline.fit(docs,
+          TopicPipeline.Config(k = k, termsPerTopic = 7))
+        // a doc with no vocabulary terms gets an all-zero distribution:
+        // every topic ties, so the top-2 order falls to the tie-break
+        val empty = TopicPipeline.topicDistributions(f)
+          .where(col("doc_id") >= 100L).collect().map(_.getSeq[Double](1))
+        assert(empty.length == 2 && empty.forall(_.distinct.size == 1))
+        Seq(1, 3, 5, 12).foreach { n =>
+          val g = f.copy(cfg = f.cfg.copy(nTags = n))
+          assert(rows(TopicPipeline.tags(g)) ==
+            rows(graft.ops.RelationalTags.tags(g)), s"seed=$seed k=$k nTags=$n")
+        }
+        f.tokenized.unpersist()
+      }
+    }
+  }
+
+  test("tags is one projection over the topic distributions: no join, " +
+      "no aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val plan = TopicPipeline.tags(fitted).queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j; case a: Aggregate => a }.isEmpty,
+      s"tags regroups again:\n$plan")
+  }
+
   test("seeded LDA refit on the same features is deterministic") {
     // Note: determinism is tested against a FIXED featurization —
     // CountVectorizer breaks equal-count vocabulary ties arbitrarily, so

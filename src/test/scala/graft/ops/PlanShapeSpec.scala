@@ -121,6 +121,51 @@ class PlanShapeSpec extends SparkSpec {
     assertNoQuadraticJoin("q50", CurationQueries.q50CuratedCorpus(spark, dir))
   }
 
+  test("curation exactStage gates quality above the rebalance: no " +
+      "regexp_replace or split filter below the round-robin exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val extra = p match {
+        case q: QueryStageExec => Seq(q.plan)
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case _ => Nil
+      }
+      p +: (p.children ++ extra).flatMap(walk)
+    }
+    def textKernel(e: Expression): Boolean = e.exists {
+      case _: RegExpReplace | _: StringSplit => true
+      case _ => false
+    }
+    val plan = graft.CurationPipeline.exactStage(
+      graft.Tables.documents(spark, dir)).queryExecution.executedPlan
+    val rebalances = walk(plan).collect {
+      case e: ShuffleExchangeLike
+          if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
+    assert(rebalances.nonEmpty, s"documents() no longer rebalances:\n$plan")
+    val below = rebalances.flatMap(e => walk(e.child)).flatMap {
+      case f: FilterExec if textKernel(f.condition) => Seq(f.condition.sql)
+      case s: FileSourceScanExec => s.dataFilters.filter(textKernel).map(_.sql)
+      case _ => Nil
+    }
+    assert(below.isEmpty, "the quality gate runs in the scan task, below " +
+      s"the rebalance: ${below.mkString("; ")}\n$plan")
+  }
+
+  test("Tables.configure excludes InferFiltersFromGenerate, which the " +
+      "generator row drops of exactStage and DedupOps.shingles rely on") {
+    val fresh = spark.newSession()
+    val key = "spark.sql.optimizer.excludedRules"
+    graft.Tables.configure(fresh)
+    assert(fresh.conf.getOption(key).exists(_.split(",").map(_.trim).contains(
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")),
+      s"$key = ${fresh.conf.getOption(key)}")
+  }
+
   test("q128 chunk near-dup stays a banded equi-join") {
     assertNoQuadraticJoin("q128",
       graft.queries.DedupQueries.q128ChunkNearDup(spark, dir))

@@ -135,6 +135,34 @@ class StoredPairsSpec extends SparkSpec {
     java.nio.file.Files.delete(in)
   }
 
+  test("publish onto an artifact another builder published after our " +
+      "delete keeps theirs and nests no staging dir") {
+    import sqlImplicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-publish")
+    val live = root.resolve("rel").toString
+    val fp = "v=1|in:1:1"
+    val want = Set((1L, "a"), (2L, "b"))
+    def stage(dst: String): Unit = {
+      want.toSeq.toDF("id", "v").write.parquet(dst)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dst, "_graft_fingerprint"), fp)
+    }
+    val tmp = s"$live.tmp-1"
+    stage(tmp)
+    stage(live) // the other JVM's publish lands between our delete and move
+    StoredRelations.publish(tmp, live, fp)
+    assert(!new java.io.File(tmp).exists, "our staging dir was left behind")
+    val nested = new java.io.File(live).list().filter(_.contains(".tmp-"))
+    assert(nested.isEmpty, s"staging dir nested in the artifact: ${nested.toSeq}")
+    assert(spark.read.parquet(live).as[(Long, String)].collect().toSet == want)
+    // a live artifact built for another fingerprint is not ours to read
+    stage(tmp)
+    intercept[java.io.IOException](
+      StoredRelations.publish(tmp, live, "v=2|in:1:1"))
+    assert(new java.io.File(tmp).exists)
+    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("fingerprint errors on missing inputs and sees nested paths") {
     // a nonexistent input must be an ERROR: silently folding it as
     // absent would cache an empty relation as valid forever
